@@ -67,21 +67,9 @@ def evaluate(
         row.update(res.saliency_dict)
         return row
 
-    # Pin AQE off for the whole batch: each explain() gates AQE off for
-    # its tiny post-scan phase, and with overlapping instances the
-    # per-thread set/restore of the SESSION-wide conf races (threads
-    # re-enable AQE mid-phase for their neighbors — measured ~25% eval
-    # throughput loss). One set + one restore keeps every thread's
-    # micro-queries consistently gated; the per-instance scans at eval
-    # fixture sizes don't need AQE.
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        if parallelism > 1:
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                rows = list(pool.map(one, enumerate(instances)))
-        else:
-            rows = [one(x) for x in enumerate(instances)]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+    if parallelism > 1:
+        with ThreadPoolExecutor(max_workers=parallelism) as pool:
+            rows = list(pool.map(one, enumerate(instances)))
+    else:
+        rows = [one(x) for x in enumerate(instances)]
     return pd.DataFrame(rows)

@@ -2,12 +2,22 @@
 
 Same contract as the reference: given two records and a matcher,
 produce (saliency, probabilities-of-sufficiency, counterfactuals,
-triangles). Pandas objects at the API edge for drop-in familiarity;
-every stage underneath is a Spark plan (SURVEY.md §3.1).
+triangles). Pandas objects at the API edge for drop-in familiarity.
+
+Spark runs the phases whose size grows with the data: the support scan
+over the sources (operators/support.py) and the model rounds. What
+follows the scan is bounded by ``num_triangles``, so both ``explain``
+and ``explain_batch`` collect the support pairs (at most
+``num_triangles`` + 1 per instance) and finish on the driver: wedge
+enumeration, one batched lookup of the triangle members, the
+perturbation rows, one model round over them (one per depth for a
+costly matcher), and the flip/PSS/saliency/counterfactual folds
+(operators/triangles.py).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -18,9 +28,15 @@ from certa_spark import tmpcache
 from certa_spark.matching import Matcher, NativeCosineMatcher
 from certa_spark.operators import triangles as T
 from certa_spark.operators.augment import generate_modified
-from certa_spark.operators.pairs import composite_id, pair_row
-from certa_spark.operators.support import support_predictions
+from certa_spark.operators.pairs import pair_row
+from certa_spark.operators.support import (
+    support_predictions,
+    support_predictions_batch,
+)
 from certa_spark.schema import LPREFIX, RPREFIX
+
+# counterfactual frame columns after the pair attributes
+CF_TAIL = (*T.BOOKKEEPING, "match_score", "nomatch_score", "depth", "attr_count")
 
 
 @dataclass
@@ -33,10 +49,17 @@ class Explanation:
     triangles: list[tuple[str, str, str]]
     cf_summary: pd.Series = field(default_factory=pd.Series)
     lattices: list = field(default_factory=list)
-    # Spark-side handles for further composition
     saliency_dict: dict[str, float] = field(default_factory=dict)
-    counterfactuals_df: DataFrame | None = None
-    pss_df: DataFrame | None = None
+
+
+def _empty() -> Explanation:
+    return Explanation(pd.DataFrame(), pd.Series(dtype=float), pd.DataFrame(), [])
+
+
+def _series(by_set: dict[tuple, float]) -> pd.Series:
+    return pd.Series(
+        list(by_set.values()), index=["/".join(a) for a in by_set], dtype=float
+    )
 
 
 class CertaExplainer:
@@ -88,62 +111,51 @@ class CertaExplainer:
         max_predict: int = -1,
         debug: bool = False,
     ) -> Explanation:
-        # every short-lived cache below registers with this scope and
-        # is unpersisted when the explanation (pure driver-side data)
-        # is returned — see tmpcache.py for why leaking them degrades
-        # long sessions
+        # the DA fallback's cached probe copies register with this scope
+        # and are unpersisted when the explanation (pure driver-side
+        # data) is returned — see tmpcache.py for why leaking them
+        # degrades long sessions
         with tmpcache.scope():
-            return self._explain_scoped(
-                l_tuple, r_tuple, matcher, left, right, attr_length,
-                num_triangles, lprefix, rprefix, max_predict, debug,
+            spark = self.spark
+            if matcher is None:
+                matcher = NativeCosineMatcher(lprefix, rprefix)
+
+            # 1. original prediction (explain.py:54-55)
+            r1r2 = pair_row(spark, l_tuple, r_tuple, lprefix, rprefix)
+            scores = (
+                matcher.predict(r1r2)
+                .select("nomatch_score", "match_score")
+                .collect()[0]
             )
+            pc = 1 if scores["match_score"] > scores["nomatch_score"] else 0
 
-    def _explain_scoped(
-        self, l_tuple, r_tuple, matcher, left, right, attr_length,
-        num_triangles, lprefix, rprefix, max_predict, debug,
-    ) -> Explanation:
-        spark = self.spark
-        if matcher is None:
-            matcher = NativeCosineMatcher(lprefix, rprefix)
-
-        # 1. original prediction (explain.py:54-55)
-        r1r2 = pair_row(spark, l_tuple, r_tuple, lprefix, rprefix)
-        scores = matcher.predict(r1r2).select("nomatch_score", "match_score").collect()[0]
-        pc = 1 if scores["match_score"] > scores["nomatch_score"] else 0
-
-        # 2. support search (explain.py:56-62)
-        support_pairs, copies_left, copies_right = support_predictions(
-            spark, l_tuple, r_tuple, self.lsource, self.rsource, matcher,
-            class_to_explain=pc, num_triangles=num_triangles,
-            lprefix=lprefix, rprefix=rprefix, use_w=left, use_q=right,
-            max_predict=max_predict, use_all=self.use_all, seed=self.seed,
-        )
-        # Tiny frames: plain cache() is enough here because lineage is
-        # already truncated at the scan output (scan_candidates_dual
-        # localCheckpoints its prediction frame) — without that leaf,
-        # per-action Catalyst re-analysis of the accumulated plan
-        # dominated wall-clock (28s of a 42s explain). Each extra
-        # localCheckpoint costs one materialization job (~0.3s), so only
-        # the cuts below the big scans keep one.
-        support_pairs = tmpcache.track(support_pairs.repartition(1).cache())
-        # Everything after the (checkpointed) scans runs on frames of
-        # <= 3*num_triangles rows, where AQE only multiplies jobs: each
-        # tiny exchange materializes as its own adaptive stage-job
-        # (~0.1s scheduler latency each — job tracing showed 12+ jobs
-        # for ONE triangle collect). Turn it off for the micro-query
-        # phase and restore on exit; the big candidate scans above keep
-        # it (skew/coalesce matter there).
-        if attr_length <= 0:
-            attr_length = min(len(l_tuple) - 1, len(r_tuple) - 1)
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return self._explain_post_scan(
-                spark, support_pairs, copies_left, copies_right, scores,
-                pc, attr_length, matcher, lprefix, rprefix, debug,
+            # 2. support search (explain.py:56-62)
+            support_pairs, copies_left, copies_right = support_predictions(
+                spark, l_tuple, r_tuple, self.lsource, self.rsource, matcher,
+                class_to_explain=pc, num_triangles=num_triangles,
+                lprefix=lprefix, rprefix=rprefix, use_w=left, use_q=right,
+                max_predict=max_predict, use_all=self.use_all, seed=self.seed,
             )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+            triangles = T.wedges(support_pairs.select("id", "label").collect())
+            if not triangles:
+                return _empty()
+
+            # 3. perturb+predict over the triangles; DA copies of r2
+            # extend the left source and copies of r1 the right one
+            # (explain.py:67)
+            if attr_length <= 0:
+                attr_length = min(len(l_tuple) - 1, len(r_tuple) - 1)
+            extensions = (
+                None if copies_left is None else (copies_right, copies_left)
+            )
+            result = T.perturb_predict(
+                spark, triangles, self.lsource, self.rsource, matcher, pc,
+                attr_length, lprefix, rprefix, extensions,
+            )
+            return self._explanation(
+                triangles, result, attr_length, lprefix, rprefix,
+                float(scores["match_score"]) if debug else None,
+            )
 
     def explain_batch(
         self,
@@ -154,22 +166,20 @@ class CertaExplainer:
         lprefix: str = LPREFIX,
         rprefix: str = RPREFIX,
         max_predict: int = -1,
-        parallelism: int = 4,
         scan_batch_size: int = 8,
     ) -> list[Explanation]:
         """Set-oriented multi-pair explain — the shape the reference's
         per-instance Python loop cannot express: ONE model round scores
-        every instance's original pair, and ONE fused corpus scan +
-        model round (operators/support.support_predictions_batch)
-        covers every instance's candidate search. Only the tiny
-        post-scan micro-phases (≤ 3·num_triangles-row frames) run per
-        instance, in threads over the shared checkpointed scan output
-        with AQE gated off once for the whole phase.
+        every instance's original pair, ONE fused corpus scan + model
+        round (operators/support.support_predictions_batch) covers every
+        instance's candidate search, and ONE member lookup and model
+        round (per depth for a costly matcher) cover every instance's
+        perturbations.
 
         ``explain_batch([x]) == [explain(x)]`` by construction (same
-        seeds, same per-tag stop rules) — parity-tested. Instances
-        whose support falls short (DA fallback) transparently take the
-        single-instance path.
+        seeds, same per-instance stop rules) — parity-tested. Instances
+        whose support falls short (DA fallback) rescan through the
+        single-instance support path and then join the shared rounds.
 
         ``scan_batch_size`` chunks very large batches: each chunk is
         one fused scan. Catalyst analysis of the k-way union grows
@@ -177,17 +187,11 @@ class CertaExplainer:
         than two batch-8 plans), so the default keeps each plan in the
         regime where the fused scan wins.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
-        from certa_spark.operators.support import support_predictions_batch
-
-        spark = self.spark
         if matcher is None:
             matcher = NativeCosineMatcher(lprefix, rprefix)
         if len(instances) > scan_batch_size:
-            # overlap chunk pipelines (chunk n+1's scan runs while
-            # chunk n's post-scan micro-phases drain); AQE toggling
-            # across threads is a perf knob only, same as eval.evaluate
+            # overlap chunk pipelines: chunk n+1's scan runs while chunk
+            # n's driver-side pass and model round drain
             chunks = [
                 instances[at : at + scan_batch_size]
                 for at in range(0, len(instances), scan_batch_size)
@@ -197,14 +201,23 @@ class CertaExplainer:
                     cpool.map(
                         lambda ch: self.explain_batch(
                             ch, matcher, num_triangles, attr_length,
-                            lprefix, rprefix, max_predict, parallelism,
-                            scan_batch_size,
+                            lprefix, rprefix, max_predict, scan_batch_size,
                         ),
                         chunks,
                     )
                 )
             return [e for part in parts for e in part]
+        with tmpcache.scope():
+            return self._explain_chunk(
+                instances, matcher, num_triangles, attr_length,
+                lprefix, rprefix, max_predict,
+            )
 
+    def _explain_chunk(
+        self, instances, matcher, num_triangles, attr_length,
+        lprefix, rprefix, max_predict,
+    ) -> list[Explanation]:
+        spark = self.spark
         # 1. original predictions, one model round for all instances
         heads = None
         for i, (l_t, r_t) in enumerate(instances):
@@ -212,313 +225,105 @@ class CertaExplainer:
                 "_i", F.lit(i)
             )
             heads = h if heads is None else heads.unionByName(h)
-        score_rows = {
-            r["_i"]: r
-            for r in matcher.predict(heads)
+        pcs = [0] * len(instances)
+        for r in (
+            matcher.predict(heads)
             .select("_i", "nomatch_score", "match_score")
             .collect()
-        }
-        pcs = [
-            1
-            if score_rows[i]["match_score"] > score_rows[i]["nomatch_score"]
-            else 0
-            for i in range(len(instances))
-        ]
+        ):
+            pcs[r["_i"]] = 1 if r["match_score"] > r["nomatch_score"] else 0
 
         # 2. fused support scan for all instances
         all_support, n_support = support_predictions_batch(
             spark, instances, self.lsource, self.rsource, matcher, pcs,
             num_triangles, lprefix, rprefix, max_predict, self.seed,
         )
-        all_support = all_support.repartition(2).localCheckpoint()
+        edges: list[list] = [[] for _ in instances]
+        for r in all_support.select("_probe", "id", "label").collect():
+            edges[r["_probe"]].append((r["id"], r["label"]))
+        extensions: list = [None] * len(instances)
+        for i, (l_t, r_t) in enumerate(instances):
+            if n_support[i] < num_triangles:
+                # the DA fallback's augmentation rescan belongs to the
+                # single-instance support path
+                support_i, copies_left, copies_right = support_predictions(
+                    spark, l_t, r_t, self.lsource, self.rsource, matcher,
+                    class_to_explain=pcs[i], num_triangles=num_triangles,
+                    lprefix=lprefix, rprefix=rprefix, max_predict=max_predict,
+                    use_all=self.use_all, seed=self.seed,
+                )
+                edges[i] = support_i.select("id", "label").collect()
+                if copies_left is not None:
+                    extensions[i] = (copies_right, copies_left)
 
+        # 3. perturb+predict for every instance with triangles at once
         if attr_length <= 0:
-            attr_length = min(
-                len(instances[0][0]) - 1, len(instances[0][1]) - 1
-            )
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-
-            def one(i: int) -> Explanation:
-                # per-thread scope: each worker owns exactly the caches
-                # its post-scan micro-phases create
-                with tmpcache.scope():
-                    return _one_scoped(i)
-
-            def _one_scoped(i: int) -> Explanation:
-                if n_support[i] < num_triangles:
-                    # DA fallback needs the augmentation rescan — the
-                    # single-instance path owns that machinery
-                    return self.explain(
-                        instances[i][0], instances[i][1], matcher,
-                        attr_length=attr_length,
-                        num_triangles=num_triangles,
-                        lprefix=lprefix, rprefix=rprefix,
-                        max_predict=max_predict,
-                    )
-                support_i = tmpcache.track(
-                    all_support.filter(F.col("_probe") == i)
-                    .drop("_probe")
-                    .repartition(1)
-                    .cache()
-                )
-                return self._explain_post_scan(
-                    spark, support_i, None, None, score_rows[i],
-                    pcs[i], attr_length, matcher, lprefix, rprefix, False,
-                )
-
-            # Cross-instance fused post-scan (round-8 perf work): a
-            # cheap (JVM-side) matcher already predicts all depths in
-            # one round per instance, but the 16 per-instance pipelines
-            # still issue ~8 tiny actions EACH, all serializing through
-            # the single-threaded DAGScheduler (measured: ~60s of
-            # thread-time for 16 post-scans vs ~9s of scans). The fused
-            # path tags every frame with _probe and runs ONE plan per
-            # phase for the whole chunk — identical outputs per
-            # instance (parity-tested). DA-fallback instances keep the
-            # per-instance path, as does a real (non-cheap) model where
-            # per-depth early exit saves actual inference.
-            fused_idx = [
-                i for i in range(len(instances))
-                if n_support[i] >= num_triangles
-            ]
-            if (
-                getattr(matcher, "cheap", False)
-                and attr_length > 1
-                and fused_idx
-            ):
-                with tmpcache.scope():
-                    results = self._explain_post_scan_fused_batch(
-                        spark, all_support, fused_idx, score_rows,
-                        pcs, attr_length, matcher, lprefix, rprefix,
-                    )
-                rest = [
-                    i for i in range(len(instances)) if i not in results
-                ]
-                if rest:
-                    with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                        for i, e in zip(rest, pool.map(one, rest)):
-                            results[i] = e
-                return [results[i] for i in range(len(instances))]
-
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                return list(pool.map(one, range(len(instances))))
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-
-    def _explain_post_scan_fused_batch(
-        self, spark, all_support, idx, score_rows, pcs, attr_length,
-        matcher, lprefix, rprefix,
-    ) -> dict[int, Explanation]:
-        """Post-scan micro-phases for a whole chunk in ONE plan per
-        phase (triangles, resolution, perturb+predict, rankings,
-        summaries) — every frame probe-tagged, ~8 driver actions total
-        instead of ~8 per instance. Per-instance outputs are identical
-        to :meth:`_explain_post_scan` (parity-tested); the per-instance
-        Spark handles (``pss_df``/``counterfactuals_df``) are lazy
-        probe filters over the shared frames."""
-        supp = all_support.filter(F.col("_probe").isin(idx))
-        tri_all = tmpcache.track(
-            T.mixed_triangles(supp, probe_col="_probe")
-            .repartition(2)
-            .cache()
-        )
-        tri_rows_all = tri_all.collect()
-        tri_by_probe: dict[int, list] = {}
-        for r in tri_rows_all:
-            tri_by_probe.setdefault(r["_probe"], []).append(r)
-
-        results: dict[int, Explanation] = {}
-        for i in idx:
-            if not tri_by_probe.get(i):
-                results[i] = Explanation(
-                    pd.DataFrame(), pd.Series(dtype=float),
-                    pd.DataFrame(), [],
-                )
-        live = [i for i in idx if i in tri_by_probe]
-        if not live:
-            return results
-
-        n_tri_by_probe = {i: len(tri_by_probe[i]) for i in live}
-        pcs_by_probe = {i: pcs[i] for i in live}
-        resolved = {
-            side: df.repartition(2).localCheckpoint()
-            for side, df in T.resolve_triangle_records(
-                tri_all, self.lsource, self.rsource, lprefix, rprefix
-            ).items()
+            attr_length = min(len(instances[0][0]) - 1, len(instances[0][1]) - 1)
+        triangles = [T.wedges(e) for e in edges]
+        probes = {
+            i: T.Probe(tris, pcs[i], extensions[i])
+            for i, tris in enumerate(triangles)
+            if tris
         }
-        flipped, rankings, n_flipped_by_probe = (
+        results = (
             T.perturb_predict_fused_batch(
-                resolved, self.lsource, self.rsource, matcher,
-                pcs_by_probe, attr_length, lprefix, rprefix,
+                spark, probes, self.lsource, self.rsource, matcher,
+                attr_length, lprefix, rprefix,
             )
+            if probes
+            else {}
         )
-        flipped = tmpcache.track(flipped.repartition(2).cache())
-        rankings = tmpcache.track(rankings.repartition(2).cache())
-        explanation = tmpcache.track(
-            T.aggregate_rankings_batch(
-                rankings, n_tri_by_probe, attr_length
+        return [
+            self._explanation(
+                triangles[i], results[i], attr_length, lprefix, rprefix
             )
-            .repartition(2)
-            .cache()
-        )
-        attributes = [
-            lprefix + c for c in self.lsource.columns if c != "id"
-        ] + [rprefix + c for c in self.rsource.columns if c != "id"]
-        sal_by_probe = T.saliency_batch(
-            rankings, attributes, n_tri_by_probe, n_flipped_by_probe
-        )
-        summary = tmpcache.track(
-            T.cf_summary_batch(explanation).repartition(2).cache()
-        )
-        cfs = T.counterfactuals_batch(flipped, summary)
+            if i in results
+            else _empty()
+            for i in range(len(instances))
+        ]
 
-        pss_all = explanation.select("_probe", "attr_set", "pss").toPandas()
-        summary_all = summary.select("_probe", "attr_set", "pss").toPandas()
-        cf_all = (
-            cfs.withColumn(
-                "alteredAttributes", F.array_join("alteredAttributes", "/")
-            )
-            .withColumn("droppedValues", F.array_join("droppedValues", "/"))
-            .withColumn("copiedValues", F.array_join("copiedValues", "/"))
-            .drop("_pc")
-            .toPandas()
-        )
-        for i in live:
-            pss_pdf = pss_all[pss_all["_probe"] == i]
-            summary_pdf = summary_all[summary_all["_probe"] == i]
-            cf_pdf = (
-                cf_all[cf_all["_probe"] == i]
-                .drop(columns=["_probe"])
-                .sort_values("attr_count", kind="stable")
-                .reset_index(drop=True)
-            )
-            sal = sal_by_probe[i]
-            results[i] = Explanation(
-                saliency=pd.DataFrame([sal]),
-                pss=pd.Series(
-                    data=pss_pdf["pss"].values,
-                    index=pss_pdf["attr_set"].values,
-                ),
-                counterfactuals=cf_pdf,
-                triangles=[
-                    (r["pivot"], r["anchor"], r["free"])
-                    for r in tri_by_probe[i]
-                ],
-                cf_summary=pd.Series(
-                    data=summary_pdf["pss"].values,
-                    index=summary_pdf["attr_set"].values,
-                ),
-                lattices=[],
-                saliency_dict=sal,
-                counterfactuals_df=cfs.filter(F.col("_probe") == i)
-                .drop("_probe", "_pc")
-                .orderBy("attr_count"),
-                pss_df=explanation.filter(F.col("_probe") == i).drop(
-                    "_probe"
-                ),
-            )
-        return results
-
-    def _explain_post_scan(
-        self, spark, support_pairs, copies_left, copies_right, scores,
-        pc, attr_length, matcher, lprefix, rprefix, debug,
+    def _explanation(
+        self, triangles, result, attr_length, lprefix, rprefix,
+        debug_score: float | None = None,
     ) -> Explanation:
-        # no support_pairs.count()==0 early exit: empty support implies
-        # empty triangles, and the tri_rows check below returns the same
-        # empty Explanation — counting here would only add an action
-        # (support derives from a checkpointed leaf, so letting the
-        # triangle plan materialize the cache costs no recompute)
-
-        # 3. extended sources (explain.py:67): DA copies of r2 extend the
-        # left source, copies of r1 extend the right source.
-        ext_l, ext_r = self.lsource, self.rsource
-        if copies_right is not None:
-            ext_l = tmpcache.track(
-                ext_l.unionByName(copies_right.select(*ext_l.columns)).cache()
-            )
-        if copies_left is not None:
-            ext_r = tmpcache.track(
-                ext_r.unionByName(copies_left.select(*ext_r.columns)).cache()
-            )
-
-        # 4. triangle enumeration (triangles_method.py:25-53)
-        tri = tmpcache.track(T.mixed_triangles(support_pairs).repartition(1).cache())
-        tri_rows = tri.collect()
-        n_triangles = len(tri_rows)
-        if n_triangles == 0:
-            return Explanation(pd.DataFrame(), pd.Series(dtype=float), pd.DataFrame(), [])
-
-        # 5. depth loop + aggregations
-        flipped, rankings, all_pred = T.perturb_predict(
-            spark, tri, ext_l, ext_r, matcher, pc, attr_length, lprefix, rprefix
-        )
-        pre_nf = getattr(flipped, "_precomputed_n_flipped", None)
-        ranking_rows = getattr(rankings, "_precomputed_ranking_rows", None)
-        flipped = tmpcache.track(flipped.repartition(2).cache())
-        rankings = tmpcache.track(rankings.repartition(1).cache())
-        n_flipped = pre_nf if pre_nf is not None else flipped.count()
-
-        explanation = tmpcache.track(T.aggregate_rankings(rankings, n_triangles, attr_length).repartition(1).cache())
+        """Fold one instance's scored perturbations into its
+        explanation (explain.py:64-78): PSS, saliency, cf_summary and
+        the deduplicated counterfactuals; with ``debug_score`` (the
+        original match score) also the per-triangle lattices
+        (explain.py:79-153)."""
+        flips, rankings, predicted = result
         attributes = [lprefix + c for c in self.lsource.columns if c != "id"] + [
             rprefix + c for c in self.rsource.columns if c != "id"
         ]
-        # the fused perturb path already collected the per-set flip
-        # counts — fold saliency driver-side instead of re-collecting
-        sal = (
-            T.saliency_from_counts(
-                ranking_rows, attributes, n_triangles, n_flipped
-            )
-            if ranking_rows is not None
-            else T.saliency(rankings, attributes, n_triangles, n_flipped)
-        )
-        summary = tmpcache.track(T.cf_summary(explanation).repartition(1).cache())
-        cfs = T.counterfactuals(flipped, summary)
-
+        n_tri = len(triangles)
+        pss = T.aggregate_rankings(rankings, n_tri, attr_length)
+        summary = T.cf_summary(pss)
+        sal = T.saliency(rankings, attributes, n_tri, len(flips))
+        cfs = pd.DataFrame(
+            [
+                {
+                    **r,
+                    **{
+                        c: "/".join(v for v in r[c] if v is not None)
+                        for c in T.VALUE_LISTS
+                    },
+                    "attr_count": len(r["alteredAttributes"]),
+                }
+                for r in T.counterfactuals(flips, summary)
+            ],
+            columns=[*attributes, *CF_TAIL],
+        ).astype({"depth": "int32", "attr_count": "int32"})
         lattices: list = []
-        if debug:
-            # debug lattices (explain.py:79-153): regroup the prediction
-            # log per triangle driver-side; the reference's CSV round-trip
-            # (S3) is skipped — the log DataFrame is collected directly.
+        if debug_score is not None:
             from certa_spark.lattice import lattices_from_predictions
 
-            lattices = lattices_from_predictions(
-                all_pred.collect(), attributes, float(scores["match_score"])
-            )
-
-        # pss + summary ride ONE tagged-union collect (their branches
-        # are cached single-partition frames, so per-branch row order
-        # is the same the two separate toPandas calls produced)
-        both = (
-            explanation.select(F.lit(0).alias("_t"), "attr_set", "pss")
-            .unionByName(
-                summary.select(F.lit(1).alias("_t"), "attr_set", "pss")
-            )
-            .toPandas()
-        )
-        pss_pdf = both[both["_t"] == 0][["attr_set", "pss"]]
-        summary_pdf = both[both["_t"] == 1][["attr_set", "pss"]]
-        cf_pdf = (
-            cfs.withColumn(
-                "alteredAttributes", F.array_join("alteredAttributes", "/")
-            )
-            .withColumn("droppedValues", F.array_join("droppedValues", "/"))
-            .withColumn("copiedValues", F.array_join("copiedValues", "/"))
-            .toPandas()
-        )
+            lattices = lattices_from_predictions(predicted, attributes, debug_score)
         return Explanation(
             saliency=pd.DataFrame([sal]),
-            pss=pd.Series(
-                data=pss_pdf["pss"].values, index=pss_pdf["attr_set"].values
-            ),
-            counterfactuals=cf_pdf,
-            triangles=[(r["pivot"], r["anchor"], r["free"]) for r in tri_rows],
-            cf_summary=pd.Series(
-                data=summary_pdf["pss"].values, index=summary_pdf["attr_set"].values
-            ),
+            pss=_series(pss),
+            counterfactuals=cfs,
+            triangles=[t[:3] for t in triangles],
+            cf_summary=_series(summary),
             lattices=lattices,
             saliency_dict=sal,
-            counterfactuals_df=cfs,
-            pss_df=explanation,
         )

@@ -288,12 +288,14 @@ def get_support(
         n_rows = sum(min(c, max_len) for c in counts)
         if max(*counts) > max_len:
             # reference: random sample the larger side down to max_len
-            # (local_explain.py:182-185); per-side window, tiny input
+            # (local_explain.py:182-185); per-side window over a tiny
+            # input, kept in one partition so it plans no exchange
             wb = Window.partitionBy("_side_tag").orderBy(
                 "_h", lprefix + "id", rprefix + "id"
             )
             scanned = (
-                scanned.withColumn(
+                scanned.coalesce(1)
+                .withColumn(
                     "_h",
                     hash32(
                         composite_id(F.col(lprefix + "id"), F.col(rprefix + "id")),
@@ -348,7 +350,11 @@ def support_predictions(
         spark, r1, r2, lsource, rsource, matcher, find_positives,
         num_triangles, lprefix, rprefix, use_w, use_q, max_predict, use_all, seed,
     )
-    support = tmpcache.track(support1.cache())
+    # one partition from here on: the frame is small (at most a few
+    # scan batches), and the windows and sort below then plan no
+    # exchange; uncached, because the caller collects it once — so
+    # that collect is a single job
+    support = support1.coalesce(1)
 
     copies_left = copies_right = None
     if n_support < num_triangles:
@@ -363,7 +369,7 @@ def support_predictions(
             num_triangles, lprefix, rprefix, use_w, use_q, max_predict, use_all,
             seed + 7,
         )
-        support = tmpcache.track(support.unionByName(support2).cache())
+        support = support.unionByName(support2).coalesce(1)
         n_support += n_support2
 
     if n_support == 0:
@@ -488,8 +494,12 @@ def support_predictions_batch(
     wb = Window.partitionBy("_side_tag").orderBy(
         "_h", lprefix + "id", rprefix + "id"
     )
+    # the qualifying rows are few (at most a few scan batches per
+    # instance): one partition lets the windows below plan no exchange,
+    # so collecting the support pairs is a single job
     balanced = (
-        scanned.withColumn(
+        scanned.coalesce(1)
+        .withColumn(
             "_h",
             hash32(
                 composite_id(F.col(lprefix + "id"), F.col(rprefix + "id")),

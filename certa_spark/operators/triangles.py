@@ -2,93 +2,84 @@
 depth-stratified flip analysis — the heart of CERTA
 (certa/triangles_method.py).
 
-Spark-first re-expressions:
+Spark runs the phases whose size grows with the data: the support scan
+(operators/support.py), the batched lookup of triangle members in the
+sources, and every model round. Everything else an explanation needs is
+bounded by ``num_triangles`` and runs on the driver over plain Python
+rows:
 
   * Wedge enumeration (getMixedTriangles, triangles_method.py:25-53):
-    the reference scans positives row-by-row with boolean-mask lookups
-    (O(P*N)); here it is two hash equi-joins pos><neg on the shared
-    endpoint — the classic wedge/motif join, shuffle-partitioned by the
-    join key, skew handled by AQE.
+    :func:`wedges` over the collected support pairs (at most
+    ``num_triangles`` + 1 per instance). :func:`mixed_triangles` keeps
+    the Spark form — two hash equi-joins pos><neg on the shared
+    endpoint — for the registry query over a full prediction graph.
 
   * Perturbation generation (createPerturbationsFromTriangle,
-    triangles_method.py:72-121): the reference loops triangle-by-
-    triangle building pandas rows; here the depth-``a`` attribute
-    powerset is a broadcast literal array and every (triangle, subset)
-    perturbation materializes in one explode — a narrow stage.
+    triangles_method.py:72-121): n_tri × Σ_d C(attrs, d) rows.
 
-  * Flip counting (getAttributeRanking/aggregateRankings,
-    triangles_method.py:376-396): hash aggregation with map-side
-    partials (A1/A2), replacing the hand-rolled two-phase dict merge.
+  * Perturb+predict (triangles_method.py:266-334): a cheap matcher
+    scores every depth of every instance in ONE model round and the
+    monotonicity early exit is re-applied afterwards; a costly one
+    (``matcher.cheap`` false) gets one round per depth that covers every
+    instance not yet exited, so the early exit saves real inference.
 
-The per-depth loop with the monotonicity early-exit
-(perturb_predict, triangles_method.py:266-334) stays driver-side by
-design — each depth is one Spark job and the stop decision is a
-``count()`` action (SURVEY.md §4).
+  * Flip counting, PSS, saliency, cf_summary and counterfactuals
+    (triangles_method.py:224-263, 376-396): integer sums and one float
+    division per value.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from itertools import combinations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-from certa_spark import tmpcache
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
-from certa_spark.functions.litfast import array_lit
-from certa_spark.matching import SCORE_COLS, Matcher
+from certa_spark.matching import Matcher
 from certa_spark.schema import LPREFIX, RPREFIX
 
-BOOKKEEPING = ("alteredAttributes", "droppedValues", "copiedValues", "triangle")
+# per-row lists of the altered attributes and their old and new values
+VALUE_LISTS = ("alteredAttributes", "droppedValues", "copiedValues")
+BOOKKEEPING = (*VALUE_LISTS, "triangle")
+
+# (pivot, anchor, free, side): <pivot, anchor> predicted a match,
+# <anchor, free> a non-match; side 'left' when pivot and free are
+# left-source records
+Triangle = tuple[str, str, str, str]
 
 
-def mixed_triangles(
-    support_pairs: DataFrame,
-    probe_col: str | None = None,
-) -> DataFrame:
-    """J3 — enumerate open triangles (pivot, anchor, free).
+def mixed_triangles(support_pairs: DataFrame) -> DataFrame:
+    """J3 — enumerate open triangles (pivot, anchor, free) in Spark.
 
     Input: support pairs with composite ``id`` ("0@l#1@r") and ``label``
     (1 = predicted match). A triangle <u, v, w> has <u,v> a match and
     <v,w> a non-match (triangles_method.py:26). Returns columns
     ``pivot, anchor, free`` ("src@id" strings) and ``side``
     ('left' when the pivot/free records live in the left source).
-
-    ``probe_col``: when the support frame carries several instances'
-    pairs tagged by a probe column (the fused batch path), the wedge
-    joins also equi-join on it, so triangles never cross instances and
-    the output keeps the tag — one plan enumerates every instance's
-    triangles.
     """
     parts = F.split(F.col("id"), "#")
-    tag = [F.col(probe_col)] if probe_col else []
     edges = support_pairs.select(
-        *tag,
         parts.getItem(0).alias("lt"),
         parts.getItem(1).alias("rt"),
         F.col("label").cast("int").alias("label"),
     )
-    pos = edges.filter(F.col("label") == 1).select(*tag, "lt", "rt")
+    pos = edges.filter(F.col("label") == 1).select("lt", "rt")
     neg = edges.filter(F.col("label") == 0).select(
-        *([F.col(probe_col).alias("_n_probe")] if probe_col else []),
-        F.col("lt").alias("n_lt"),
-        F.col("rt").alias("n_rt"),
+        F.col("lt").alias("n_lt"), F.col("rt").alias("n_rt")
     )
-    same_probe = (
-        (F.col(probe_col) == F.col("_n_probe")) if probe_col else F.lit(True)
-    )
-    out_tag = [F.col(probe_col)] if probe_col else []
     # shared right endpoint: (l, r) match + (l', r) non-match -> <l, r, l'>
-    left_tri = pos.join(neg, (pos.rt == neg.n_rt) & same_probe).select(
-        *out_tag,
+    left_tri = pos.join(neg, pos.rt == neg.n_rt).select(
         F.col("lt").alias("pivot"),
         F.col("rt").alias("anchor"),
         F.col("n_lt").alias("free"),
         F.lit("left").alias("side"),
     )
     # shared left endpoint: (l, r) match + (l, r') non-match -> <r, l, r'>
-    right_tri = pos.join(neg, (pos.lt == neg.n_lt) & same_probe).select(
-        *out_tag,
+    right_tri = pos.join(neg, pos.lt == neg.n_lt).select(
         F.col("rt").alias("pivot"),
         F.col("lt").alias("anchor"),
         F.col("n_rt").alias("free"),
@@ -97,193 +88,270 @@ def mixed_triangles(
     return left_tri.unionByName(right_tri)
 
 
-def _member_id(col: F.Column) -> F.Column:
-    return F.split(col, "@").getItem(1).cast("long")
-
-
-def _subsets_literal(attrs: list[str], depth: int) -> F.Column:
-    subs = [list(c) for c in combinations(attrs, depth)]
-    if not subs:
-        return F.array().cast("array<array<string>>")
-    # one py4j round trip for the whole C(n,depth) literal (litfast) —
-    # the splat form paid one round trip per attr name per subset,
-    # re-paid for every depth of every explain call
-    return array_lit(subs)
-
-
-def perturbations_at_depth(
-    triangles: DataFrame,
-    lsource: DataFrame,
-    rsource: DataFrame,
-    depth: int,
-    class_to_explain: int,
-    lprefix: str = LPREFIX,
-    rprefix: str = RPREFIX,
-) -> DataFrame:
-    """UD5/U3 — all depth-``depth`` perturbation pairs for all triangles.
-
-    Sources are the *unprefixed* (id + attrs) extended sources. For a
-    left-side triangle the pivot u and free w live in ``lsource`` and
-    the anchor v in ``rsource`` (vice versa for right). For
-    class_to_explain==1 the perturbed record starts from u and receives
-    subset values from w; for class 0 it starts from w and receives
-    values from u (triangles_method.py:84-105). Output: prefixed pair
-    attribute columns (ids dropped) + alteredAttributes/droppedValues/
-    copiedValues arrays + triangle string.
-    """
-    resolved = resolve_triangle_records(
-        triangles, lsource, rsource, lprefix, rprefix
-    )
-    return perturbations_from_resolved(
-        resolved, lsource, rsource, depth, class_to_explain, lprefix, rprefix
-    )
-
-
-def resolve_triangle_records(
-    triangles: DataFrame,
-    lsource: DataFrame,
-    rsource: DataFrame,
-    lprefix: str = LPREFIX,
-    rprefix: str = RPREFIX,
-) -> dict[str, DataFrame]:
-    """J4 — resolve triangle members (u=pivot, v=anchor, w=free) to full
-    records, once per side. Returns {'left': df, 'right': df}.
-
-    Join direction matters at scale: the triangle table is ≤ a few
-    hundred rows while sources can be arbitrarily large, so the
-    *triangle* side is broadcast into each source scan (3 broadcast
-    joins of a tiny dim per side) — never the reverse. Callers should
-    cache+coalesce the two outputs and reuse them across the depth loop
-    (perturb_predict does) instead of re-joining per depth.
-    """
-    l_attrs = [c for c in lsource.columns if c != "id"]
-    r_attrs = [c for c in rsource.columns if c != "id"]
-    out = {}
-    for side in ("left", "right"):
-        tri = triangles.filter(F.col("side") == side)
-        if side == "left":
-            pivot_src, anchor_src = lsource, rsource
-            pivot_attrs, anchor_attrs = l_attrs, r_attrs
-        else:
-            pivot_src, anchor_src = rsource, lsource
-            pivot_attrs, anchor_attrs = r_attrs, l_attrs
-
-        u = pivot_src.select(
-            F.col("id").alias("_uid"),
-            *[F.col(c).cast("string").alias("u_" + c) for c in pivot_attrs],
-        )
-        w = pivot_src.select(
-            F.col("id").alias("_wid"),
-            *[F.col(c).cast("string").alias("w_" + c) for c in pivot_attrs],
-        )
-        v = anchor_src.select(
-            F.col("id").alias("_vid"),
-            *[F.col(c).cast("string").alias("v_" + c) for c in anchor_attrs],
-        )
-        tri_keys = (
-            tri.withColumn("_uid", _member_id(F.col("pivot")))
-            .withColumn("_vid", _member_id(F.col("anchor")))
-            .withColumn("_wid", _member_id(F.col("free")))
-        )
-        j1 = u.join(F.broadcast(tri_keys), "_uid")
-        j2 = w.join(F.broadcast(j1), "_wid")
-        out[side] = v.join(F.broadcast(j2), "_vid")
+def wedges(edges) -> list[Triangle]:
+    """Driver-side :func:`mixed_triangles` over collected
+    ``(id, label)`` support pairs: every match <l, r> pairs with every
+    non-match sharing its right endpoint (a 'left' triangle) and with
+    every non-match sharing its left endpoint (a 'right' one),
+    duplicates included — the same multiset as the join form."""
+    pos: list[tuple[str, str]] = []
+    neg_by_r: dict[str, list[str]] = {}
+    neg_by_l: dict[str, list[str]] = {}
+    for cid, label in edges:
+        lt, rt = cid.split("#")
+        if label == 1:
+            pos.append((lt, rt))
+        elif label == 0:
+            neg_by_r.setdefault(rt, []).append(lt)
+            neg_by_l.setdefault(lt, []).append(rt)
+    out = [(lt, rt, f, "left") for lt, rt in pos for f in neg_by_r.get(rt, ())]
+    out += [(rt, lt, f, "right") for lt, rt in pos for f in neg_by_l.get(lt, ())]
     return out
 
 
-def perturbations_from_resolved(
-    resolved: dict[str, DataFrame],
-    lsource: DataFrame,
-    rsource: DataFrame,
+@dataclass
+class Probe:
+    """One explained instance after its support scan: its triangles,
+    the class being explained and, when the DA fallback ran, the token-
+    drop copies extending the (left, right) sources."""
+
+    triangles: list[Triangle]
+    class_to_explain: int
+    extensions: tuple[DataFrame, DataFrame] | None = None
+
+
+def _member_id(member: str) -> int:
+    return int(member.split("@")[1])
+
+
+def fetch_members(
+    probes: dict[int, Probe], lsource: DataFrame, rsource: DataFrame
+) -> dict[int, list[tuple[Triangle, dict, dict, dict]]]:
+    """J4 — resolve every triangle member (u=pivot, v=anchor, w=free) of
+    every probe to its records with ONE Spark collect over the sources
+    (and each probe's DA extensions). Returns, per probe, one
+    ``(triangle, u, v, w)`` entry per matching record combination — an
+    id held by several records yields every combination and a missing
+    one none, as an inner join would."""
+    l_attrs = [c for c in lsource.columns if c != "id"]
+    r_attrs = [c for c in rsource.columns if c != "id"]
+    # probe -> (left ids, right ids)
+    need = {p: (set(), set()) for p in probes}
+    for p, probe in probes.items():
+        for pivot, anchor, free, side in probe.triangles:
+            own, other = need[p] if side == "left" else need[p][::-1]
+            own.update((_member_id(pivot), _member_id(free)))
+            other.add(_member_id(anchor))
+
+    def lookup(df, attrs, src, probe, ids):
+        rid = F.col("id").cast("long")
+        return df.filter(rid.isin(sorted(ids))).select(
+            F.lit(probe).alias("_probe"),
+            F.lit(src).alias("_src"),
+            rid.alias("id"),
+            F.array(*[F.col(c).cast("string") for c in attrs]).alias("_vals"),
+        )
+
+    parts = []
+    for src, (source, attrs) in enumerate(((lsource, l_attrs), (rsource, r_attrs))):
+        ids = set().union(*(need[p][src] for p in probes))
+        parts.append(lookup(source, attrs, src, -1, ids))
+        for p, probe in probes.items():
+            if probe.extensions is not None:
+                ext = probe.extensions[src].select(*source.columns)
+                parts.append(lookup(ext, attrs, src, p, need[p][src]))
+    frame = parts[0]
+    for part in parts[1:]:
+        frame = frame.unionByName(part)
+    records: dict[tuple[int, int, int], list[dict]] = {}
+    for r in frame.collect():
+        attrs = r_attrs if r["_src"] else l_attrs
+        records.setdefault((r["_probe"], r["_src"], r["id"]), []).append(
+            dict(zip(attrs, r["_vals"]))
+        )
+
+    def recs(p: int, src: int, member: str) -> list[dict]:
+        rid = _member_id(member)
+        return records.get((-1, src, rid), []) + records.get((p, src, rid), [])
+
+    out = {}
+    for p, probe in probes.items():
+        out[p] = []
+        for tri in probe.triangles:
+            own, other = (0, 1) if tri[3] == "left" else (1, 0)
+            out[p] += [
+                (tri, u, v, w)
+                for u in recs(p, own, tri[0])
+                for w in recs(p, own, tri[2])
+                for v in recs(p, other, tri[1])
+            ]
+    return out
+
+
+def perturbations(
+    members: list[tuple[Triangle, dict, dict, dict]],
+    l_attrs: list[str],
+    r_attrs: list[str],
     depth: int,
     class_to_explain: int,
     lprefix: str = LPREFIX,
     rprefix: str = RPREFIX,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """Explode the depth-``depth`` attribute subsets over pre-resolved
-    triangle records (no joins — narrow stage only). ``keep`` names
-    extra columns of the resolved frames (e.g. the batch path's
-    ``_probe`` tag) to carry through to the perturbation rows."""
-    l_attrs = [c for c in lsource.columns if c != "id"]
-    r_attrs = [c for c in rsource.columns if c != "id"]
-
+) -> list[dict]:
+    """UD5/U3 — all depth-``depth`` perturbation rows of the resolved
+    triangles. For a left-side triangle the pivot u and free w are
+    left-source records and the anchor v a right-source one (vice versa
+    for right). For class_to_explain==1 the perturbed record starts from
+    u and receives the subset's values from w; for class 0 it starts
+    from w and receives values from u (triangles_method.py:84-105).
+    Subsets are over prefixed attribute names (triangles_method.py:
+    211-212). Each row holds the prefixed pair attributes, the
+    alteredAttributes/droppedValues/copiedValues tuples, the triangle
+    string and the depth."""
     out = []
-    for side in ("left", "right"):
+    for (pivot, anchor, free, side), u, v, w in members:
         if side == "left":
-            pivot_pfx, anchor_pfx = lprefix, rprefix
-            pivot_attrs, anchor_attrs = l_attrs, r_attrs
+            ppfx, apfx, p_attrs, a_attrs = lprefix, rprefix, l_attrs, r_attrs
         else:
-            pivot_pfx, anchor_pfx = rprefix, lprefix
-            pivot_attrs, anchor_attrs = r_attrs, l_attrs
-        joined = resolved[side]
-        # subsets are over *prefixed* attr names (triangles_method.py:211-212)
-        subsets = _subsets_literal([pivot_pfx + c for c in pivot_attrs], depth)
-        exploded = joined.withColumn("alteredAttributes", F.explode(subsets))
-
-        if class_to_explain == 1:
-            base, donor = "u_", "w_"
-        else:
-            base, donor = "w_", "u_"
-        base_map = F.create_map(
-            *[
-                x
-                for c in pivot_attrs
-                for x in (F.lit(pivot_pfx + c), F.col(base + c))
-            ]
-        )
-        donor_map = F.create_map(
-            *[
-                x
-                for c in pivot_attrs
-                for x in (F.lit(pivot_pfx + c), F.col(donor + c))
-            ]
-        )
-        pivot_cols = [
-            F.when(
-                F.array_contains(F.col("alteredAttributes"), pivot_pfx + c),
-                F.col(donor + c),
-            )
-            .otherwise(F.col(base + c))
-            .alias(pivot_pfx + c)
-            for c in pivot_attrs
-        ]
-        anchor_cols = [
-            F.col("v_" + c).alias(anchor_pfx + c) for c in anchor_attrs
-        ]
-        cols = pivot_cols + anchor_cols if side == "left" else anchor_cols + pivot_cols
-        out.append(
-            exploded.select(
-                *[F.col(c) for c in keep],
-                *cols,
-                F.col("alteredAttributes"),
-                F.transform(
-                    F.col("alteredAttributes"), lambda a: F.element_at(base_map, a)
-                ).alias("droppedValues"),
-                F.transform(
-                    F.col("alteredAttributes"), lambda a: F.element_at(donor_map, a)
-                ).alias("copiedValues"),
-                F.concat_ws(" ", "pivot", "anchor", "free").alias("triangle"),
-            )
-        )
-    result = out[0]
-    for df in out[1:]:
-        result = result.unionByName(df)
-    return result
+            ppfx, apfx, p_attrs, a_attrs = rprefix, lprefix, r_attrs, l_attrs
+        base, donor = (u, w) if class_to_explain == 1 else (w, u)
+        anchor_cols = {apfx + c: v[c] for c in a_attrs}
+        triangle = f"{pivot} {anchor} {free}"
+        for subset in combinations(p_attrs, depth):
+            row = {
+                ppfx + c: (donor if c in subset else base)[c] for c in p_attrs
+            }
+            row.update(anchor_cols)
+            row["alteredAttributes"] = tuple(ppfx + c for c in subset)
+            row["droppedValues"] = tuple(base[c] for c in subset)
+            row["copiedValues"] = tuple(donor[c] for c in subset)
+            row["triangle"] = triangle
+            row["depth"] = depth
+            out.append(row)
+    return out
 
 
-def flip_condition(class_to_explain: int) -> F.Column:
+def is_flip(row: dict, class_to_explain: int) -> bool:
     """P9 — prediction flipped away from the original class
     (triangles_method.py:307)."""
-    score_of_class = (
-        F.col("match_score") if class_to_explain == 1 else F.col("nomatch_score")
+    key = "match_score" if class_to_explain == 1 else "nomatch_score"
+    return row[key] < 0.5
+
+
+def _score(spark: SparkSession, matcher: Matcher, rows: list[dict], pair_cols):
+    """One model round: a Spark frame of ``rows`` goes through
+    ``matcher.predict`` and the scores are written back into the rows."""
+    if not rows:
+        return
+    strings = ArrayType(StringType())
+    schema = StructType(
+        [StructField(c, StringType()) for c in pair_cols]
+        + [StructField(c, strings) for c in VALUE_LISTS]
+        + [
+            StructField("triangle", StringType()),
+            StructField("depth", IntegerType()),
+            StructField("_row", LongType()),
+        ]
     )
-    return score_of_class < 0.5
+    data = [
+        (
+            *[r[c] for c in pair_cols],
+            *[list(r[c]) for c in VALUE_LISTS],
+            r["triangle"],
+            r["depth"],
+            k,
+        )
+        for k, r in enumerate(rows)
+    ]
+    frame = spark.createDataFrame(data, schema, verifySchema=False)
+    scored = matcher.predict(frame).select("_row", "match_score", "nomatch_score")
+    for k, match, nomatch in scored.collect():
+        rows[k]["match_score"] = match
+        rows[k]["nomatch_score"] = nomatch
+
+
+def perturb_predict_fused_batch(
+    spark: SparkSession,
+    probes: dict[int, Probe],
+    lsource: DataFrame,
+    rsource: DataFrame,
+    matcher: Matcher,
+    attr_length: int,
+    lprefix: str = LPREFIX,
+    rprefix: str = RPREFIX,
+) -> dict[int, tuple[list[dict], list[tuple], list[dict]]]:
+    """:func:`perturb_predict` for many instances at once, keyed by
+    probe: one member lookup and shared model rounds for all of them
+    (probes may explain different classes). Each probe keeps the
+    reference's monotonicity early exit: once every perturbation of a
+    depth flips, deeper depths are synthesized as flipped without their
+    model scores (``all_good``, triangles_method.py:309-327).
+
+    A cheap matcher scores all depths of all probes in one round and the
+    exit is applied afterwards (the scores of synthesized depths are
+    discarded); otherwise round ``d`` scores depth ``d`` of the probes
+    not yet exited."""
+    l_attrs = [c for c in lsource.columns if c != "id"]
+    r_attrs = [c for c in rsource.columns if c != "id"]
+    pair_cols = [lprefix + c for c in l_attrs] + [rprefix + c for c in r_attrs]
+    depths = range(1, attr_length)
+    members = fetch_members(probes, lsource, rsource) if depths else {}
+    rows = {
+        p: {
+            d: perturbations(
+                members[p], l_attrs, r_attrs, d,
+                probe.class_to_explain, lprefix, rprefix,
+            )
+            for d in depths
+        }
+        for p, probe in probes.items()
+    }
+
+    def all_flip(p: int, d: int) -> bool:
+        pc = probes[p].class_to_explain
+        return bool(rows[p][d]) and all(is_flip(r, pc) for r in rows[p][d])
+
+    # the last depth of each probe that keeps its model scores
+    real_upto = {p: attr_length for p in probes}
+    if getattr(matcher, "cheap", False):
+        _score(
+            spark, matcher,
+            [r for p in probes for d in depths for r in rows[p][d]], pair_cols,
+        )
+        for p in probes:
+            real_upto[p] = next((d for d in depths if all_flip(p, d)), attr_length)
+    else:
+        live = set(probes)
+        for d in depths:
+            if not live:
+                break
+            _score(spark, matcher, [r for p in live for r in rows[p][d]], pair_cols)
+            for p in [p for p in live if all_flip(p, d)]:
+                real_upto[p] = d
+                live.discard(p)
+
+    out = {}
+    for p, probe in probes.items():
+        pc = probe.class_to_explain
+        match_syn = 1.0 if pc == 0 else 0.0
+        flips, counts, predicted = [], {}, []
+        for d in depths:
+            for r in rows[p][d]:
+                if d > real_upto[p]:
+                    r["match_score"], r["nomatch_score"] = match_syn, 1.0 - match_syn
+                else:
+                    predicted.append(r)
+                key = (r["alteredAttributes"], d)
+                counts[key] = counts.get(key, 0)
+                if is_flip(r, pc):
+                    counts[key] += 1
+                    flips.append(r)
+        out[p] = (flips, [(a, n, d) for (a, d), n in counts.items()], predicted)
+    return out
 
 
 def perturb_predict(
     spark: SparkSession,
-    triangles: DataFrame,
+    triangles: list[Triangle],
     lsource: DataFrame,
     rsource: DataFrame,
     matcher: Matcher,
@@ -291,251 +359,41 @@ def perturb_predict(
     attr_length: int,
     lprefix: str = LPREFIX,
     rprefix: str = RPREFIX,
-    fused: bool | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Depth-stratified perturb+predict loop with monotonicity early
-    exit (triangles_method.py:266-334).
-
-    Depths run 1..attr_length-1 (reference ``range(1, attr_length)``).
-    Once an entire depth flips, deeper depths synthesize flipped scores
-    without calling the model (``all_good``, lines 309-327).
-
-    ``fused`` (default: ``matcher.cheap``) predicts EVERY depth in one
-    model round and reconstructs the early-exit semantics from per-depth
-    flip stats afterwards — identical outputs (depths past the first
-    fully-flipped one are re-synthesized and their real predictions
-    discarded, matching the reference's prediction log), one Spark
-    action instead of one per depth. Only worth it when extra matcher
-    evaluations are free (JVM-side matchers); a real model keeps the
-    per-depth loop so the early exit saves actual inference.
+    extensions: tuple[DataFrame, DataFrame] | None = None,
+) -> tuple[list[dict], list[tuple], list[dict]]:
+    """Depth-stratified perturb+predict of one instance
+    (triangles_method.py:266-334); depths run 1..attr_length-1
+    (reference ``range(1, attr_length)``).
 
     Returns (flipped_predictions, rankings, all_predictions):
-      * flipped_predictions — perturbation rows + scores that flipped;
-      * rankings — (alteredAttributes, depth, flips) incl. zero-flip
+      * flipped_predictions — scored perturbation rows that flipped;
+      * rankings — (alteredAttributes, flips, depth) incl. zero-flip
         subsets (getAttributeRanking keeps zeros, line 377);
-      * all_predictions — every *model-predicted* perturbation + scores
-        (the S3 prediction log; synthesized depths excluded, matching
-        the reference which only logs real predictions).
+      * all_predictions — every row that kept its model score (the S3
+        prediction log; synthesized depths excluded, matching the
+        reference which only logs real predictions).
     """
-    triangles = tmpcache.track(triangles.cache())
-    # resolve triangle-member records ONCE (3 broadcast joins per side),
-    # collapse to a few partitions (the frame is <= 3*num_triangles
-    # rows), and reuse across every depth — the per-depth work is then
-    # a narrow explode with no joins and no wide task fan-out.
-    resolved = {
-        side: df.repartition(2).localCheckpoint()  # truncate lineage; keep scan parallel
-        for side, df in resolve_triangle_records(
-            triangles, lsource, rsource, lprefix, rprefix
-        ).items()
-    }
-    if fused is None:
-        fused = getattr(matcher, "cheap", False)
-    if fused and attr_length > 1:
-        return _perturb_predict_fused(
-            resolved, lsource, rsource, matcher, class_to_explain,
-            attr_length, lprefix, rprefix,
-        )
-
-    flipped_parts: list[DataFrame] = []
-    ranking_parts: list[DataFrame] = []
-    predicted_parts: list[DataFrame] = []
-    all_good = False
-    n_flipped_total = 0
-
-    for depth in range(1, attr_length):
-        pert = perturbations_from_resolved(
-            resolved, lsource, rsource, depth, class_to_explain, lprefix, rprefix
-        )
-        if not all_good:
-            predicted = tmpcache.track(matcher.predict(pert).cache())
-            stats = predicted.agg(
-                F.count("*").alias("n"),
-                F.sum(flip_condition(class_to_explain).cast("long")).alias("nf"),
-            ).collect()[0]
-            n_pert = stats["n"]
-            if n_pert == 0:
-                continue
-            flipped = predicted.filter(flip_condition(class_to_explain))
-            predicted_parts.append(predicted.withColumn("depth", F.lit(depth)))
-            n_flipped = stats["nf"]
-        else:
-            # synthesized scores: everything counts as flipped
-            # (triangles_method.py:309-319)
-            match_syn = 1.0 if class_to_explain == 0 else 0.0
-            predicted = tmpcache.track(pert.withColumn(
-                "match_score", F.lit(match_syn)
-            ).withColumn("nomatch_score", F.lit(1.0 - match_syn)).cache())
-            n_pert = predicted.count()
-            if n_pert == 0:
-                continue
-            flipped = predicted
-            n_flipped = n_pert
-
-        n_flipped_total += n_flipped
-        flipped_parts.append(flipped.withColumn("depth", F.lit(depth)))
-        ranking_parts.append(
-            predicted.groupBy("alteredAttributes")
-            .agg(
-                F.sum(flip_condition(class_to_explain).cast("long")).alias("flips")
-            )
-            .withColumn("depth", F.lit(depth))
-        )
-        if not all_good and n_flipped == n_pert:
-            all_good = True
-
-    def _union(parts: list[DataFrame], template: DataFrame) -> DataFrame:
-        if not parts:
-            return template
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    empty_rank = spark.createDataFrame(
-        [], "alteredAttributes array<string>, flips long, depth int"
-    )
-    pert0 = perturbations_from_resolved(
-        resolved, lsource, rsource, 1, class_to_explain, lprefix, rprefix
-    )
-    empty_pred = (
-        pert0.withColumn("match_score", F.lit(0.0))
-        .withColumn("nomatch_score", F.lit(0.0))
-        .withColumn("depth", F.lit(0))
-        .limit(0)
-    )
-    out_flipped = _union(flipped_parts, empty_pred)
-    # per-depth flip counts were already collected by the stats agg —
-    # expose the total so callers can skip a count() action
-    out_flipped._precomputed_n_flipped = n_flipped_total
-    return (
-        out_flipped,
-        _union(ranking_parts, empty_rank),
-        _union(predicted_parts, empty_pred),
-    )
-
-
-def _perturb_predict_fused(
-    resolved: dict,
-    lsource: DataFrame,
-    rsource: DataFrame,
-    matcher: Matcher,
-    class_to_explain: int,
-    attr_length: int,
-    lprefix: str,
-    rprefix: str,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One-round variant of the depth loop (see perturb_predict): union
-    all depths' perturbations, predict once, then apply the reference's
-    all_good rule post-hoc — the first fully-flipped depth ``d*`` keeps
-    its real predictions, deeper depths are re-synthesized exactly as
-    triangles_method.py:309-327 would have (and dropped from the
-    prediction log, which only records real model calls)."""
-    parts = [
-        perturbations_from_resolved(
-            resolved, lsource, rsource, d, class_to_explain, lprefix, rprefix
-        ).withColumn("depth", F.lit(d))
-        for d in range(1, attr_length)
-    ]
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    predicted = tmpcache.track(matcher.predict(allp).cache())
-    flip = flip_condition(class_to_explain)
-    # ONE collect serves the whole post-prediction bookkeeping (r12):
-    # per-(alteredAttributes, depth) totals and flip counts. Per-depth
-    # stats (the all_good/d_star reconstruction) are exact integer sums
-    # of these rows; the rankings frame is exactly these rows with
-    # flips := nf for real depths and := n for synthesized ones
-    # (matching the old real-groupBy / syn-count union); and saliency's
-    # per-attribute counts fold from the same rows driver-side — three
-    # driver actions collapsed into one, values bit-identical (all
-    # integer arithmetic).
-    by_set = (
-        predicted.groupBy("alteredAttributes", "depth")
-        .agg(F.count("*").alias("n"), F.sum(flip.cast("long")).alias("nf"))
-        .collect()
-    )
-    stats: dict[int, tuple[int, int]] = {}
-    for r in by_set:
-        n0, nf0 = stats.get(r["depth"], (0, 0))
-        stats[r["depth"]] = (n0 + r["n"], nf0 + (r["nf"] or 0))
-    d_star = None
-    for d in sorted(stats):
-        n, nf = stats[d]
-        if n > 0 and nf == n:
-            d_star = d
-            break
-
-    pert_cols = [c for c in allp.columns if c != "depth"]
-    order = [*pert_cols, "match_score", "nomatch_score", "depth"]
-    if d_star is None or d_star >= attr_length - 1:
-        real, syn = predicted.select(*order), None
-    else:
-        real = predicted.filter(F.col("depth") <= d_star).select(*order)
-        match_syn = 1.0 if class_to_explain == 0 else 0.0
-        syn = (
-            allp.filter(F.col("depth") > d_star)
-            .withColumn("match_score", F.lit(match_syn))
-            .withColumn("nomatch_score", F.lit(1.0 - match_syn))
-            .select(*order)
-        )
-
-    flipped = real.filter(flip)
-    if syn is not None:
-        flipped = flipped.unionByName(syn)
-    ranking_rows = [
-        (
-            list(r["alteredAttributes"]),
-            int(r["nf"] or 0)
-            if d_star is None or r["depth"] <= d_star
-            else int(r["n"]),
-            int(r["depth"]),
-        )
-        for r in by_set
-    ]
-    spark = predicted.sparkSession
-    _rank_schema = "alteredAttributes array<string>, flips bigint, depth int"
-    # parallelize() would slice these few hundred rows across
-    # defaultParallelism partitions and every downstream task-launch
-    # would multiply under concurrent explains — pin to one slice
-    rankings = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranking_rows, 1), _rank_schema
-    ) if ranking_rows else spark.createDataFrame([], _rank_schema)
-    # the caller can fold saliency / explanation inputs driver-side
-    # from the same rows instead of re-collecting
-    rankings._precomputed_ranking_rows = ranking_rows
-    # n_flipped is fully determined by the stats already collected —
-    # real depths contribute their flip count, synthesized depths count
-    # whole — so the caller can skip a flipped.count() action
-    flipped._precomputed_n_flipped = sum(
-        (nf if d_star is None or d <= d_star else n)
-        for d, (n, nf) in stats.items()
-    )
-    return (
-        flipped,
-        rankings,
-        real,
-    )
+    probe = Probe(triangles, class_to_explain, extensions)
+    return perturb_predict_fused_batch(
+        spark, {0: probe}, lsource, rsource, matcher, attr_length,
+        lprefix, rprefix,
+    )[0]
 
 
 def aggregate_rankings(
-    rankings: DataFrame, n_triangles: int, attr_length: int
-) -> DataFrame:
+    rankings: list[tuple], n_triangles: int, attr_length: int
+) -> dict[tuple, float]:
     """A2 — merge per-depth flip counts, normalize by #triangles
-    (aggregateRankings, triangles_method.py:387-396).
-
-    Returns (alteredAttributes array, attr_set string "a/b", pss double).
-    """
-    return (
-        rankings.filter(F.size("alteredAttributes") <= attr_length)
-        .groupBy("alteredAttributes")
-        .agg((F.sum("flips") / F.lit(float(n_triangles))).alias("pss"))
-        .withColumn("attr_set", F.array_join("alteredAttributes", "/"))
-    )
+    (aggregateRankings, triangles_method.py:387-396): attr-set -> PSS."""
+    sums: dict[tuple, int] = {}
+    for attrs, flips, _depth in rankings:
+        if len(attrs) <= attr_length:
+            sums[attrs] = sums.get(attrs, 0) + flips
+    return {attrs: s / float(n_triangles) for attrs, s in sums.items()}
 
 
 def saliency(
-    rankings: DataFrame,
+    rankings: list[tuple],
     attributes: list[str],
     n_triangles: int,
     n_flipped: int,
@@ -545,36 +403,14 @@ def saliency(
     counts, where flips = #flipped predictions + #triangles."""
     flips = n_flipped + n_triangles
     base = n_triangles / flips if flips else 0.0
-    per_attr = (
-        rankings.select(F.explode("alteredAttributes").alias("attr"), "flips")
-        .groupBy("attr")
-        .agg(F.sum("flips").alias("cnt"))
-        .collect()
-    )
-    counts = {r["attr"]: r["cnt"] for r in per_attr}
-    return {a: base + counts.get(a, 0) / flips for a in attributes}
-
-
-def saliency_from_counts(
-    ranking_rows: list,
-    attributes: list[str],
-    n_triangles: int,
-    n_flipped: int,
-) -> dict[str, float]:
-    """Driver-side twin of :func:`saliency` for the fused perturb path,
-    folding the already-collected (alteredAttributes, flips, depth)
-    rows instead of re-collecting them from Spark. Integer sums and the
-    same two float divisions — values identical to the Spark fold."""
-    flips = n_flipped + n_triangles
-    base = n_triangles / flips if flips else 0.0
     counts: dict[str, int] = {}
-    for attrs, nf, _depth in ranking_rows:
+    for attrs, nf, _depth in rankings:
         for a in attrs:
             counts[a] = counts.get(a, 0) + nf
     return {a: base + counts.get(a, 0) / flips for a in attributes}
 
 
-def cf_summary(explanation: DataFrame) -> DataFrame:
+def cf_summary(pss: dict[tuple, float]) -> dict[tuple, float]:
     """A5+A6 — keep attr-sets at the max PSS, then drop any set that
     strictly contains another surviving set (cf_summary,
     triangles_method.py:254-263).
@@ -582,274 +418,27 @@ def cf_summary(explanation: DataFrame) -> DataFrame:
     The reference's minimality test operates on characters of the
     "a/b"-joined strings (a latent bug); we implement the documented
     intent — attr-*set* containment.
-
-    The max-PSS cut is an unpartitioned window over the (tiny, cached,
-    <= 2^attrs-row) explanation frame rather than a separate
-    ``agg(max).collect()`` — same filter, one fewer driver action per
-    explain (r12).
     """
-    w_all = Window.partitionBy()
-    top = tmpcache.track(
-        explanation.withColumn("_mx", F.max("pss").over(w_all))
-        .filter(F.col("pss") == F.col("_mx"))
-        .drop("_mx")
-        .cache()
-    )
-    a = top.select(
-        F.col("alteredAttributes").alias("a_set"), F.col("pss"), F.col("attr_set")
-    )
-    b = top.select(F.col("alteredAttributes").alias("b_set"))
-    strict_superset = (
-        F.size(F.array_intersect(F.col("a_set"), F.col("b_set")))
-        == F.size(F.col("b_set"))
-    ) & (F.size(F.col("a_set")) > F.size(F.col("b_set")))
-    return a.join(b, on=strict_superset, how="left_anti").select(
-        F.col("a_set").alias("alteredAttributes"), "attr_set", "pss"
-    )
-
-
-def counterfactuals(
-    flipped: DataFrame, summary: DataFrame
-) -> DataFrame:
-    """P7+P8+T4 — keep flipped rows whose altered set is one of the
-    summary's minimal sets, dedup, order simplest-first
-    (explain.py:73-77, triangles_method.py:236-239)."""
-    keys = F.broadcast(
-        summary.select(F.col("attr_set").alias("_k")).distinct()
-    )
-    out = (
-        flipped.withColumn("attr_count", F.size("alteredAttributes"))
-        .withColumn("_k", F.array_join("alteredAttributes", "/"))
-        .join(keys, "_k", "left_semi")
-        .drop("_k")
-        .dropDuplicates(["copiedValues", "alteredAttributes", "droppedValues"])
-        .orderBy("attr_count")
-    )
-    return out
-
-
-# ---------------------------------------------------------------- batch fusion
-#
-# Cross-instance fusion of the post-scan micro-phases (round-8 perf
-# work). Profiling the batch-16 explain showed the fused corpus scan is
-# no longer the bottleneck (~9s of ~95s thread-time): the 16 per-
-# instance post-scan pipelines each issue ~8 tiny Spark actions, and
-# all of them serialize through the single-threaded DAGScheduler event
-# loop. The set-oriented fix mirrors support_predictions_batch: tag
-# every frame with the instance index (_probe) and run ONE plan per
-# phase for the whole batch — triangles, resolution, perturb+predict,
-# rankings, summaries — so a chunk costs ~8 actions total instead of
-# ~8 per instance. Outputs are bit-identical per instance (parity
-# pinned by tests/test_explainer.py batch-vs-single tests).
-
-
-def perturb_predict_fused_batch(
-    resolved: dict[str, DataFrame],
-    lsource: DataFrame,
-    rsource: DataFrame,
-    matcher: Matcher,
-    pcs_by_probe: dict[int, int],
-    attr_length: int,
-    lprefix: str = LPREFIX,
-    rprefix: str = RPREFIX,
-) -> tuple[DataFrame, DataFrame, dict[int, int]]:
-    """Cross-instance variant of ``_perturb_predict_fused``: the
-    resolved triangle frames carry ``_probe``; perturbations for every
-    instance and every depth union into ONE model round. Instances may
-    have different predicted classes — the perturbation direction is
-    built per polarity group and the flip test reads a per-row ``_pc``
-    column. The reference's per-depth monotonicity rule is then
-    re-applied PER PROBE from one (probe, depth) stats pass, exactly
-    as the single-instance fused path does per instance.
-
-    Returns ``(flipped, rankings, n_flipped_by_probe)`` — the first
-    two probe-tagged, the dict carrying each instance's flip total
-    (so callers skip per-instance count() actions).
-    """
-    probes_by_pc: dict[int, list[int]] = {0: [], 1: []}
-    for p, pc in pcs_by_probe.items():
-        probes_by_pc[int(pc)].append(p)
-
-    parts: list[DataFrame] = []
-    for pc, probes in probes_by_pc.items():
-        if not probes:
-            continue
-        res_pc = {
-            side: df.filter(F.col("_probe").isin(probes))
-            for side, df in resolved.items()
-        }
-        for d in range(1, attr_length):
-            parts.append(
-                perturbations_from_resolved(
-                    res_pc, lsource, rsource, d, pc, lprefix, rprefix,
-                    keep=("_probe",),
-                )
-                .withColumn("depth", F.lit(d))
-                .withColumn("_pc", F.lit(pc))
-            )
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    predicted = tmpcache.track(matcher.predict(allp).cache())
-    score_of_class = F.when(
-        F.col("_pc") == 1, F.col("match_score")
-    ).otherwise(F.col("nomatch_score"))
-    flip = score_of_class < 0.5
-
-    stats: dict[tuple[int, int], tuple[int, int]] = {
-        (r["_probe"], r["depth"]): (r["n"], r["nf"])
-        for r in predicted.groupBy("_probe", "depth")
-        .agg(F.count("*").alias("n"), F.sum(flip.cast("long")).alias("nf"))
-        .collect()
+    if not pss:
+        return {}
+    top = max(pss.values())
+    keep = [a for a, v in pss.items() if v == top]
+    return {
+        a: top
+        for a in keep
+        if not any(set(b) < set(a) for b in keep)
     }
-    # per-probe first fully-flipped depth (the all_good rule,
-    # triangles_method.py:309-327); attr_length (> max depth) encodes
-    # "never" so a single filter expression serves every probe
-    eff_dstar: dict[int, int] = {}
-    for p in pcs_by_probe:
-        eff_dstar[p] = attr_length
-        for d in range(1, attr_length):
-            n, nf = stats.get((p, d), (0, 0))
-            if n > 0 and nf == n:
-                eff_dstar[p] = d
-                break
-    dstar_map = F.create_map(
-        *[F.lit(x) for p, d in eff_dstar.items() for x in (p, d)]
-    )
-    dstar_col = F.element_at(dstar_map, F.col("_probe"))
-
-    real = predicted.filter(F.col("depth") <= dstar_col)
-    syn = allp.filter(F.col("depth") > dstar_col)
-    match_syn = F.when(F.col("_pc") == 0, F.lit(1.0)).otherwise(F.lit(0.0))
-    syn = syn.withColumn("match_score", match_syn).withColumn(
-        "nomatch_score", F.lit(1.0) - match_syn
-    ).select(*real.columns)
-
-    flipped = real.filter(flip).unionByName(syn)
-    rankings = (
-        real.groupBy("_probe", "alteredAttributes", "depth")
-        .agg(F.sum(flip.cast("long")).alias("flips"))
-        .unionByName(
-            syn.groupBy("_probe", "alteredAttributes", "depth").agg(
-                F.count("*").cast("long").alias("flips")
-            )
-        )
-        .select("_probe", "alteredAttributes", "flips", "depth")
-    )
-    n_flipped_by_probe = {
-        p: sum(
-            (nf if d <= eff_dstar[p] else n)
-            for (pp, d), (n, nf) in stats.items()
-            if pp == p
-        )
-        for p in pcs_by_probe
-    }
-    return flipped, rankings, n_flipped_by_probe
 
 
-def aggregate_rankings_batch(
-    rankings: DataFrame, n_tri_by_probe: dict[int, int], attr_length: int
-) -> DataFrame:
-    """Probe-tagged :func:`aggregate_rankings` — per-instance PSS
-    normalization via a probe -> n_triangles literal map, one plan for
-    the whole batch."""
-    ntri_map = F.create_map(
-        *[F.lit(x) for p, n in n_tri_by_probe.items() for x in (p, float(n))]
-    )
-    return (
-        rankings.filter(F.size("alteredAttributes") <= attr_length)
-        .groupBy("_probe", "alteredAttributes")
-        .agg(
-            (
-                F.sum("flips") / F.element_at(ntri_map, F.col("_probe"))
-            ).alias("pss")
-        )
-        .withColumn("attr_set", F.array_join("alteredAttributes", "/"))
-    )
-
-
-def saliency_batch(
-    rankings: DataFrame,
-    attributes: list[str],
-    n_tri_by_probe: dict[int, int],
-    n_flipped_by_probe: dict[int, int],
-) -> dict[int, dict[str, float]]:
-    """Probe-tagged :func:`saliency`: ONE collect of per-(probe, attr)
-    flip counts, per-instance assembly driver-side."""
-    per_attr = (
-        rankings.select(
-            "_probe", F.explode("alteredAttributes").alias("attr"), "flips"
-        )
-        .groupBy("_probe", "attr")
-        .agg(F.sum("flips").alias("cnt"))
-        .collect()
-    )
-    counts: dict[int, dict[str, int]] = {}
-    for r in per_attr:
-        counts.setdefault(r["_probe"], {})[r["attr"]] = r["cnt"]
-    out: dict[int, dict[str, float]] = {}
-    for p, n_tri in n_tri_by_probe.items():
-        flips = n_flipped_by_probe.get(p, 0) + n_tri
-        base = n_tri / flips if flips else 0.0
-        cp = counts.get(p, {})
-        out[p] = {a: base + cp.get(a, 0) / flips for a in attributes}
-    return out
-
-
-def cf_summary_batch(explanation: DataFrame) -> DataFrame:
-    """Probe-tagged :func:`cf_summary`: the per-instance max-PSS read
-    becomes a window over ``_probe`` (no per-instance collect), and the
-    minimality anti-join is probe-local."""
-    from pyspark.sql.window import Window
-
-    top = tmpcache.track(
-        explanation.withColumn(
-            "_m", F.max("pss").over(Window.partitionBy("_probe"))
-        )
-        .filter(F.col("pss") == F.col("_m"))
-        .drop("_m")
-        .cache()
-    )
-    a = top.select(
-        "_probe",
-        F.col("alteredAttributes").alias("a_set"),
-        F.col("pss"),
-        F.col("attr_set"),
-    )
-    b = top.select(
-        F.col("_probe").alias("_bp"), F.col("alteredAttributes").alias("b_set")
-    )
-    strict_superset = (
-        (F.col("_probe") == F.col("_bp"))
-        & (
-            F.size(F.array_intersect(F.col("a_set"), F.col("b_set")))
-            == F.size(F.col("b_set"))
-        )
-        & (F.size(F.col("a_set")) > F.size(F.col("b_set")))
-    )
-    return a.join(b, on=strict_superset, how="left_anti").select(
-        "_probe", F.col("a_set").alias("alteredAttributes"), "attr_set", "pss"
-    )
-
-
-def counterfactuals_batch(
-    flipped: DataFrame, summary: DataFrame
-) -> DataFrame:
-    """Probe-tagged :func:`counterfactuals`: semi-join on
-    (probe, attr-set key), dedup per probe. Ordering is applied by the
-    caller when splitting per instance (simplest-first within each
-    probe, same contract as the single path's orderBy)."""
-    keys = F.broadcast(
-        summary.select(
-            "_probe", F.col("attr_set").alias("_k")
-        ).distinct()
-    )
-    return (
-        flipped.withColumn("attr_count", F.size("alteredAttributes"))
-        .withColumn("_k", F.array_join("alteredAttributes", "/"))
-        .join(keys, ["_probe", "_k"], "left_semi")
-        .drop("_k")
-        .dropDuplicates(
-            ["_probe", "copiedValues", "alteredAttributes", "droppedValues"]
-        )
-    )
+def counterfactuals(flipped_rows: list[dict], summary: dict) -> list[dict]:
+    """P7+P8+T4 — flipped rows whose altered set is one of the summary's
+    minimal sets, deduplicated on (copiedValues, alteredAttributes,
+    droppedValues), simplest first (explain.py:73-77,
+    triangles_method.py:236-239)."""
+    seen, out = set(), []
+    for r in flipped_rows:
+        key = (r["copiedValues"], r["alteredAttributes"], r["droppedValues"])
+        if r["alteredAttributes"] in summary and key not in seen:
+            seen.add(key)
+            out.append(r)
+    return sorted(out, key=lambda r: len(r["alteredAttributes"]))

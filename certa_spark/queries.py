@@ -6314,7 +6314,7 @@ def q_flagship_batch_saliency(spark, sf_dir) -> DataFrame:
         for a, b in zip(lrows, rrows)
     ]
     res = ex.explain_batch(
-        insts, NativeCosineMatcher(), num_triangles=10, parallelism=2
+        insts, NativeCosineMatcher(), num_triangles=10
     )
     rows = [
         (i, attr, round(float(v), 6))

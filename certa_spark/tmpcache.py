@@ -1,8 +1,9 @@
 """Scoped lifecycle for short-lived SQL caches in the explain path.
 
-One explain() materializes ~10 tiny cached frames (support pairs,
-triangles, rankings, ...). They are all fully collected to the driver
-before the call returns, but ``DataFrame.cache()`` entries live in
+An explain() whose DA fallback runs caches the token-drop copies of
+its probes: the augmentation scan and the member lookup both read
+them. The explanation returned is pure driver-side data, but
+``DataFrame.cache()`` entries live in
 Spark's CacheManager until explicitly unpersisted — and every
 subsequent query planning pass consults the CacheManager against each
 registered plan. A long-lived explainer session therefore slows down
@@ -16,7 +17,7 @@ frame (non-blocking, reverse order). Outside any scope ``track`` is a
 no-op — so process-lifetime caches (the explainer's source tables) are
 naturally exempt by never being created inside a scope. Thread-local
 storage makes concurrent explains (eval.evaluate thread pool,
-explain_batch workers) each own exactly their frames.
+explain_batch chunk workers) each own exactly their frames.
 """
 
 from __future__ import annotations

@@ -202,7 +202,7 @@ def test_explain_batch_matches_per_instance(spark, er_tables):
         (dict(zip(COLS, rows_a[1])), dict(zip(COLS, rows_b[1]))),
         (dict(zip(COLS, rows_a[2])), dict(zip(COLS, rows_b[40]))),  # likely non-match
     ]
-    batch = ex.explain_batch(insts, m, num_triangles=10, parallelism=3)
+    batch = ex.explain_batch(insts, m, num_triangles=10)
     for inst, got in zip(insts, batch):
         want = ex.explain(inst[0], inst[1], m, num_triangles=10)
         assert got.saliency_dict == want.saliency_dict
@@ -231,7 +231,7 @@ def test_explain_batch_chunked_parity(spark, er_tables):
         for i in range(9)
     ]
     batch = ex.explain_batch(
-        insts, m, num_triangles=10, parallelism=4, scan_batch_size=4
+        insts, m, num_triangles=10, scan_batch_size=4
     )
     assert len(batch) == 9
     for i in (0, 5, 8):  # first chunk, middle chunk, last partial chunk
@@ -239,3 +239,103 @@ def test_explain_batch_chunked_parity(spark, er_tables):
         assert batch[i].saliency_dict == want.saliency_dict
         assert sorted(batch[i].triangles) == sorted(want.triangles)
         assert dict(batch[i].pss) == dict(want.pss)
+
+
+def _summary(res):
+    """Saliency, PSS, triangles and CF sets of an explanation."""
+    cfs = res.counterfactuals
+    key = ["alteredAttributes", "droppedValues"]
+    return (
+        res.saliency_dict,
+        dict(res.pss),
+        sorted(res.triangles),
+        sorted(map(tuple, cfs[key].values.tolist())) if len(cfs) else [],
+    )
+
+
+def test_concurrent_explains_match_serial(spark, er_tables):
+    """Two explains running at once on one session (different predicted
+    classes) give exactly their serial results: the explain path keeps
+    no session-global state."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    m = NativeCosineMatcher()
+    insts = [
+        (dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[0]))),
+        (dict(zip(COLS, rows_a[2])), dict(zip(COLS, rows_b[40]))),
+    ]
+
+    def run(inst):
+        return _summary(ex.explain(inst[0], inst[1], m, num_triangles=10))
+
+    serial = [run(inst) for inst in insts]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        concurrent = list(pool.map(run, insts))
+    assert concurrent == serial
+    assert all(s[2] for s in serial)  # both instances have triangles
+
+
+def test_warm_explain_job_budget(spark, er_tables):
+    """A warm explain launches at most 12 Spark jobs: the original
+    prediction, the support scan, the support collect, one member
+    lookup and one model round."""
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    m = NativeCosineMatcher()
+    l, r = dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[0]))
+    ex.explain(l, r, m, num_triangles=10)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-explain-job-budget", "one warm explain")
+    try:
+        res = ex.explain(l, r, m, num_triangles=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-explain-job-budget")
+    assert len(res.triangles) > 0
+    assert len(jobs) <= 12, len(jobs)
+
+
+def test_costly_matcher_rows_scored(spark, er_tables):
+    """A costly (``cheap=False``) pandas model scores exactly the rows
+    the reference's per-depth early exit allows — the support scan, the
+    original pair and every perturbation depth up to the first that
+    fully flips. The counts are pinned from the per-instance depth loop
+    this engine used before its driver-side pass: 181 rows for a pair
+    that never exits early, and 151 for an identical pair under an
+    exact-match model, whose depth 1 all flips, so its 30 depth-2
+    perturbations are synthesized instead of scored."""
+    from certa_spark.matching import PandasPredictAdapter
+
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    rows = spark.sparkContext.accumulator(0)
+    native = NativeCosineMatcher()
+    attrs = COLS[1:]
+
+    def cosine(pdf):
+        rows.add(len(pdf))
+        return native.predict_pandas(pdf)
+
+    def exact(pdf):
+        rows.add(len(pdf))
+        left = pdf[["ltable_" + c for c in attrs]].values
+        right = pdf[["rtable_" + c for c in attrs]].values
+        out = pdf.copy()
+        out["match_score"] = (left == right).all(axis=1).astype(float)
+        out["nomatch_score"] = 1.0 - out["match_score"]
+        return out
+
+    l_rec = dict(zip(COLS, rows_a[0]))
+    for fn, r_rec, want in (
+        (cosine, dict(zip(COLS, rows_b[0])), 181),
+        (exact, dict(l_rec), 151),
+    ):
+        model = PandasPredictAdapter(fn)
+        assert model.cheap is False
+        before = rows.value
+        res = ex.explain(l_rec, r_rec, model, num_triangles=10)
+        assert len(res.triangles) == 10
+        assert rows.value - before == want, fn.__name__

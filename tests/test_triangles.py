@@ -5,6 +5,8 @@ from pyspark.sql import functions as F
 
 from certa_spark.operators import triangles as T
 
+SCORES = ("match_score", "nomatch_score")
+
 
 def _support(spark, rows):
     return spark.createDataFrame(rows, ["id", "label"])
@@ -50,6 +52,8 @@ def test_mixed_triangles_matches_oracle(spark):
         else:
             assert (f"{anchor}#{pivot}", 1) in rows
             assert (f"{anchor}#{free}", 0) in rows
+    # the driver-side enumeration the explainer runs gives the same set
+    assert sorted(T.wedges(rows)) == _oracle_wedges(rows)
 
 
 def _sources(spark):
@@ -63,22 +67,29 @@ def _sources(spark):
     return ls, rs
 
 
+def _perturbations(ls, rs, tri, depth, class_to_explain):
+    """Resolve one triangle's members in the sources, then build its
+    depth-``depth`` perturbation rows."""
+    members = T.fetch_members({0: T.Probe([tri], class_to_explain)}, ls, rs)[0]
+    l_attrs = [c for c in ls.columns if c != "id"]
+    r_attrs = [c for c in rs.columns if c != "id"]
+    return T.perturbations(members, l_attrs, r_attrs, depth, class_to_explain)
+
+
 def test_perturbations_class1_copy_semantics(spark):
     """class 1: perturbed record starts from pivot u, receives subset
     values from free w (triangles_method.py:84-94)."""
     ls, rs = _sources(spark)
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
-    out = T.perturbations_at_depth(tri, ls, rs, 1, 1).collect()
+    tri = ("0@1", "1@10", "0@2", "left")
+    out = _perturbations(ls, rs, tri, 1, 1)
     by_attr = {tuple(r["alteredAttributes"]): r for r in out}
     assert set(by_attr) == {("ltable_name",), ("ltable_description",)}
     r = by_attr[("ltable_name",)]
     assert r["ltable_name"] == "w name"          # copied from free
     assert r["ltable_description"] == "u desc"   # untouched from pivot
     assert r["rtable_name"] == "v name"          # anchor side intact
-    assert r["droppedValues"] == ["u name"]
-    assert r["copiedValues"] == ["w name"]
+    assert list(r["droppedValues"]) == ["u name"]
+    assert list(r["copiedValues"]) == ["w name"]
     assert r["triangle"] == "0@1 1@10 0@2"
 
 
@@ -86,16 +97,14 @@ def test_perturbations_class0_reversed(spark):
     """class 0: perturbed record starts from free w, receives values
     from pivot u (triangles_method.py:96-105)."""
     ls, rs = _sources(spark)
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
-    out = T.perturbations_at_depth(tri, ls, rs, 1, 0).collect()
+    tri = ("0@1", "1@10", "0@2", "left")
+    out = _perturbations(ls, rs, tri, 1, 0)
     by_attr = {tuple(r["alteredAttributes"]): r for r in out}
     r = by_attr[("ltable_name",)]
     assert r["ltable_name"] == "u name"          # copied from pivot
     assert r["ltable_description"] == "w desc"   # base is free record
-    assert r["droppedValues"] == ["w name"]
-    assert r["copiedValues"] == ["u name"]
+    assert list(r["droppedValues"]) == ["w name"]
+    assert list(r["copiedValues"]) == ["u name"]
 
 
 def test_perturbations_right_side_and_depth2(spark):
@@ -104,10 +113,8 @@ def test_perturbations_right_side_and_depth2(spark):
         [(10, "v name", "v desc"), (12, "q", "r"), (13, "s", "t")],
         ["id", "name", "description"],
     )
-    tri = spark.createDataFrame(
-        [("1@10", "0@1", "1@12", "right")], ["pivot", "anchor", "free", "side"]
-    )
-    out = T.perturbations_at_depth(tri, ls, rs3, 2, 1).collect()
+    tri = ("1@10", "0@1", "1@12", "right")
+    out = _perturbations(ls, rs3, tri, 2, 1)
     assert len(out) == 1  # C(2,2) = 1 subset of rtable attrs
     r = out[0]
     assert tuple(r["alteredAttributes"]) == ("rtable_name", "rtable_description")
@@ -115,22 +122,20 @@ def test_perturbations_right_side_and_depth2(spark):
     assert r["ltable_name"] == "u name"  # anchor (left) side intact
 
 
-def test_aggregate_and_summary(spark):
-    rankings = spark.createDataFrame(
-        [
-            (["a"], 3, 1),
-            (["b"], 0, 1),
-            (["a", "b"], 5, 2),
-            (["a", "c"], 5, 2),
-        ],
-        "alteredAttributes array<string>, flips long, depth int",
-    )
+def test_aggregate_and_summary():
+    # (alteredAttributes, flips, depth)
+    rankings = [
+        (("a",), 3, 1),
+        (("b",), 0, 1),
+        (("a", "b"), 5, 2),
+        (("a", "c"), 5, 2),
+    ]
     expl = T.aggregate_rankings(rankings, n_triangles=10, attr_length=3)
-    vals = {r["attr_set"]: r["pss"] for r in expl.collect()}
+    vals = {"/".join(k): v for k, v in expl.items()}
     assert vals == {"a": 0.3, "b": 0.0, "a/b": 0.5, "a/c": 0.5}
 
     summary = T.cf_summary(expl)
-    keys = {r["attr_set"] for r in summary.collect()}
+    keys = {"/".join(k) for k in summary}
     assert keys == {"a/b", "a/c"}  # both at max 0.5, neither contains the other
 
     sal = T.saliency(rankings, ["a", "b", "c"], n_triangles=10, n_flipped=13)
@@ -140,17 +145,9 @@ def test_aggregate_and_summary(spark):
     assert abs(sal["c"] - (10 / flips + 5 / flips)) < 1e-12
 
 
-def test_cf_summary_minimality(spark):
-    expl = spark.createDataFrame(
-        [
-            (["a"], "a", 0.5),
-            (["a", "b"], "a/b", 0.5),
-            (["c", "d"], "c/d", 0.5),
-            (["b"], "b", 0.2),
-        ],
-        "alteredAttributes array<string>, attr_set string, pss double",
-    )
-    keys = {r["attr_set"] for r in T.cf_summary(expl).collect()}
+def test_cf_summary_minimality():
+    expl = {("a",): 0.5, ("a", "b"): 0.5, ("c", "d"): 0.5, ("b",): 0.2}
+    keys = {"/".join(k) for k in T.cf_summary(expl)}
     # a/b strictly contains surviving a -> dropped; c/d survives
     assert keys == {"a", "c/d"}
 
@@ -158,8 +155,6 @@ def test_cf_summary_minimality(spark):
 def test_monotonicity_early_exit(spark):
     """Once an entire depth flips, deeper depths synthesize flips
     without model calls (triangles_method.py:309-327)."""
-    from certa_spark.matching import Matcher
-
     calls = []
 
     class AlwaysFlipMatcher:
@@ -176,19 +171,17 @@ def test_monotonicity_early_exit(spark):
     rs = spark.createDataFrame(
         [(10, "p", "q", "r")], ["id", "name", "description", "price"]
     )
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
+    tri = ("0@1", "1@10", "0@2", "left")
     flipped, rankings, all_pred = T.perturb_predict(
-        spark, tri, ls, rs, AlwaysFlipMatcher(), 1, attr_length=3
+        spark, [tri], ls, rs, AlwaysFlipMatcher(), 1, attr_length=3
     )
     # depth 1 flips everything -> depth 2 synthesized (1 model call only)
     assert len(calls) == 1
     # flips recorded for both depths: C(3,1) + C(3,2) subsets
-    assert flipped.count() == 3 + 3
-    assert rankings.agg(F.sum("flips")).collect()[0][0] == 6
+    assert len(flipped) == 3 + 3
+    assert sum(flips for _, flips, _ in rankings) == 6
     # prediction log only contains genuinely predicted rows
-    assert all_pred.count() == 3
+    assert len(all_pred) == 3
 
 
 def test_lens_interventions_and_degrees(spark):
@@ -303,11 +296,13 @@ def test_kernel_shap_efficiency_and_ranking(spark):
 
 
 def test_fused_depth_loop_equivalence(spark):
-    """fused=True must reproduce the loop's outputs exactly — including
-    the post-hoc early-exit reconstruction when a depth fully flips."""
+    """The one-round mode of a cheap matcher must reproduce the per-depth
+    loop of a costly one exactly — including the post-hoc early-exit
+    reconstruction when a depth fully flips."""
 
     class AlwaysFlipMatcher:
-        cheap = True
+        def __init__(self, cheap):
+            self.cheap = cheap
 
         def predict(self, pairs):
             return pairs.withColumn("match_score", F.lit(0.0)).withColumn(
@@ -321,22 +316,17 @@ def test_fused_depth_loop_equivalence(spark):
     rs = spark.createDataFrame(
         [(10, "p", "q", "r")], ["id", "name", "description", "price"]
     )
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
+    tri = ("0@1", "1@10", "0@2", "left")
 
     def snapshot(fused):
         f, r, a = T.perturb_predict(
-            spark, tri, ls, rs, AlwaysFlipMatcher(), 1, attr_length=3, fused=fused
+            spark, [tri], ls, rs, AlwaysFlipMatcher(fused), 1, attr_length=3
         )
-        key = lambda df: sorted(
+        key = lambda rows: sorted(
             (tuple(row["alteredAttributes"]), row["depth"], row["match_score"])
-            for row in df.collect()
+            for row in rows
         )
-        rank = sorted(
-            (tuple(row["alteredAttributes"]), row["depth"], row["flips"])
-            for row in r.collect()
-        )
+        rank = sorted((tuple(a_), depth, flips) for a_, flips, depth in r)
         return key(f), rank, key(a)
 
     assert snapshot(fused=False) == snapshot(fused=True)
@@ -344,14 +334,16 @@ def test_fused_depth_loop_equivalence(spark):
     # and with a non-flipping matcher (no early exit at all)
     from certa_spark.matching import NativeCosineMatcher
 
+    def unscored(rows):
+        return sorted(
+            tuple(sorted((k, v) for k, v in row.items() if k not in SCORES))
+            for row in rows
+        )
+
     def snap2(fused):
-        f, r, a = T.perturb_predict(
-            spark, tri, ls, rs, NativeCosineMatcher(), 1, attr_length=3, fused=fused
-        )
-        return (
-            sorted(map(tuple, f.drop("match_score", "nomatch_score").collect())),
-            sorted(map(tuple, r.collect())),
-            sorted(map(tuple, a.drop("match_score", "nomatch_score").collect())),
-        )
+        m = NativeCosineMatcher()
+        m.cheap = fused
+        f, r, a = T.perturb_predict(spark, [tri], ls, rs, m, 1, attr_length=3)
+        return unscored(f), sorted(r), unscored(a)
 
     assert snap2(False) == snap2(True)

@@ -116,7 +116,7 @@ def main() -> None:
     best = None
     for _ in range(runs):
         t0 = time.time()
-        ex.explain_batch(insts, matcher, num_triangles=10, parallelism=8)
+        ex.explain_batch(insts, matcher, num_triangles=10)
         dt = time.time() - t0
         best = dt if best is None else min(best, dt)
     out["explains_per_min_batch16_clean"] = round(16 * 60.0 / best, 1)
