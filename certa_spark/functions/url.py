@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from certa_spark.io import local_frame
+
 # query parameters that identify a CLICK, not a page: the standard
 # strip-list of web dedup pipelines
 _TRACKING_RE = (
@@ -160,7 +162,8 @@ def psl_table(spark, path: str = _PSL_PATH):
     ``(suffix, is_rule, is_wildcard, is_exception)``. Small by nature
     (the FULL public list is ~10k rows, well under any broadcast
     threshold); pass a production list file to swap the snapshot."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         load_psl_rules(path),
         "suffix string, is_rule boolean, is_wildcard boolean, "
         "is_exception boolean",

@@ -11,6 +11,9 @@
 The reference's temp-CSV model shim (S6, dm.py:61-68) is structurally
 unnecessary on Spark: mapInPandas hands pandas batches straight to the
 model.
+
+Driver-built rows (probe pairs, perturbations, centroids, query result
+rows) enter Spark through :func:`local_frame`.
 """
 
 from __future__ import annotations
@@ -25,6 +28,36 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """Driver-built row tuples (one value per ``schema`` field, in field
+    order) as a Spark frame, shipped as a ``pyarrow.Table`` typed by
+    ``schema`` (a StructType or a DDL string).
+
+    ``createDataFrame(list)`` pickles the rows into a ``parallelize``
+    RDD, so the first action forks Python workers to unpickle them
+    (~0.3-0.4 s even for one row). An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` is planned as
+    a ``LocalRelation`` instead: a collect over JVM expressions runs on
+    the driver with no job, and a larger table becomes a JVM-side Arrow
+    RDD, so no Python worker starts either way. A value that does not
+    fit its field (a string in a numeric column, an int32 overflow)
+    raises while the table is built."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_entity_csv(

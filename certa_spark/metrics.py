@@ -17,7 +17,9 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from certa_spark.io import local_frame
 from certa_spark.matching import Matcher
 from certa_spark.schema import LPREFIX, RPREFIX, pair_attributes
 
@@ -214,7 +216,14 @@ def check_properties(
                 **{rprefix + k: str(val) for k, val in r_rec.items()},
             }
         )
-    df = spark.createDataFrame(rows)
+    names = sorted(set().union(*rows))
+    schema = StructType(
+        [
+            StructField(n, LongType() if n == "_probe" else StringType())
+            for n in names
+        ]
+    )
+    df = local_frame(spark, [tuple(r.get(n) for n in names) for r in rows], schema)
     pred = matcher.predict(df).select(
         "_probe", (F.col("match_score") > F.col("nomatch_score")).cast("int").alias("m")
     )

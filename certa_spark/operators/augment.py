@@ -13,6 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from certa_spark.io import local_frame
 
 
 def _variants_for_attr(attr: str) -> Column:
@@ -122,8 +125,16 @@ def expand_copies(
     (ids continue after ``n_rsource``), ``copies_right`` are left-table
     records derived from ``r_record`` (ids after ``n_lsource``).
     """
-    l_df = spark.createDataFrame([{k: str(v) for k, v in l_record.items()}])
-    r_df = spark.createDataFrame([{k: str(v) for k, v in r_record.items()}])
-    copies_left = generate_modified(l_df, id_col=id_col, start_id=n_rsource)
-    copies_right = generate_modified(r_df, id_col=id_col, start_id=n_lsource)
+
+    def one_row(record: dict) -> DataFrame:
+        names = sorted(record)
+        schema = StructType([StructField(k, StringType()) for k in names])
+        return local_frame(spark, [tuple(str(record[k]) for k in names)], schema)
+
+    copies_left = generate_modified(
+        one_row(l_record), id_col=id_col, start_id=n_rsource
+    )
+    copies_right = generate_modified(
+        one_row(r_record), id_col=id_col, start_id=n_lsource
+    )
     return copies_left, copies_right

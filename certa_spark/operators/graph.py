@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from certa_spark.io import local_frame
+
 
 def _default_partitions(df: DataFrame, partitions: int | None) -> int:
     """Shuffle width for the iterative loops: caller-pinned, else the
@@ -1255,8 +1257,8 @@ def bfs_distances(
         .localCheckpoint()
     )
     spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(int(source), 0)], "node long, dist int"
+    visited = local_frame(
+        spark, [(int(source), 0)], "node long, dist int"
     ).localCheckpoint()
     frontier = visited
     for depth in range(1, max_depth + 1):
@@ -1344,8 +1346,8 @@ def betweenness_approx(
                 f"({len(srcs) - len(set(srcs))} dup(s))"
             )
         missing = (
-            edges.sparkSession.createDataFrame(
-                [(int(s),) for s in srcs], "node long"
+            local_frame(
+                edges.sparkSession, [(int(s),) for s in srcs], "node long"
             )
             .join(nodes, "node", "left_anti")
             .count()
@@ -1360,7 +1362,8 @@ def betweenness_approx(
     scale = float(n_nodes) / float(len(srcs))
 
     spark = edges.sparkSession
-    seed = spark.createDataFrame(
+    seed = local_frame(
+        spark,
         [(int(s), int(s), 0, 1) for s in srcs],
         "src long, node long, dist int, sigma long",
     ).localCheckpoint()
@@ -2317,7 +2320,8 @@ def louvain(
                 history.extend(hist2)
                 if mapping:
                     ctype = dict(proj.dtypes)["community"]
-                    mdf = proj.sparkSession.createDataFrame(
+                    mdf = local_frame(
+                        proj.sparkSession,
                         list(mapping.items()),
                         f"community {ctype}, _nc {ctype}",
                     )
@@ -3265,7 +3269,7 @@ def hyperball(
             converged = True
         prev_sum = cur
     spark = edges.sparkSession
-    return spark.createDataFrame(out_rows, "r int, nf double")
+    return local_frame(spark, out_rows, "r int, nf double")
 
 
 def random_walks(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from certa_spark.functions.litfast import array_lit
+from certa_spark.io import local_frame
 
 Q_IN = 10**6  # input-element quantization grid
 Q_W = 10**9   # eigenvector quantization grid
@@ -446,24 +447,24 @@ def nearest_centroid_expr(vec_col: str, centroids: list[list[float]]):
 def _centroids_frame(spark, centroids: list[list[float]]) -> DataFrame:
     """One-row broadcastable frame carrying the current centroid list
     as DATA (``_cents array<array<double>>``) instead of plan
-    literals. The r10 kmeans profile (tools/profile_jobs.py) showed
-    8.7 s wall with only 2.4 s inside Spark jobs: each of the ~16
-    per-iteration plans embedded k*d literal doubles, so every
-    iteration paid Catalyst analysis of a 512-literal tree AND a
+    literals. Each of the ~16 per-iteration plans that embedded k*d
+    literal doubles paid Catalyst analysis of a 512-literal tree and a
     whole-stage-codegen recompile (the generated source embeds
-    literals — new values, Janino cache miss). With centroids as a
-    broadcast data column the per-iteration tree is small and the
-    generated code is byte-identical across iterations (cache hit);
-    values flow as data. The same property is what a 100 TB run
-    needs: plan size stays O(1) in k*d (a k=1024 IVF fit would embed
-    65k literals the other way). Interleaved A/B at sf0.1, centroids
-    asserted identical: literals min 7.35 s, data-column min 6.28 s
-    (~-15% — driver time 6.3 -> 2.6 s, executor wall +2.4 s from the
-    per-row _cents read that literals constant-fold away). Attach
-    with ``df.crossJoin(F.broadcast(frame))``."""
-    return spark.createDataFrame(
-        [(centroids,)], "_cents array<array<double>>"
-    )
+    literals, so new values miss the Janino cache); r10 profile: 8.7 s
+    wall, 6.3 s of it outside Spark jobs. With centroids as a data
+    column the per-iteration tree is small and the generated code is
+    identical across iterations; the price is a per-row ``_cents``
+    read that literals would constant-fold away (interleaved A/B at
+    sf0.1: literals min 7.35 s, data column min 6.28 s). Plan size
+    stays O(1) in k*d, which a k=1024 IVF fit needs.
+
+    The row is an Arrow local relation (:func:`certa_spark.io.local_frame`),
+    so each Lloyd iteration's broadcast is one JVM task. A pickled
+    ``createDataFrame`` list made it one task per core, each forking a
+    Python worker to unpickle the row (a 1000-row cross join on 4
+    cores: ~1.5 s -> ~0.7 s). Attach with
+    ``df.crossJoin(F.broadcast(frame))``."""
+    return local_frame(spark, [(centroids,)], "_cents array<array<double>>")
 
 
 def nearest_centroid_col(vec_col: str, cents_col):

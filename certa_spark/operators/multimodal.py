@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from certa_spark.io import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -56,7 +58,7 @@ def make_fake_media(spark, n: int = 32, kind: str = "image") -> DataFrame:
     for i in range(n):
         blob = hashlib.md5(f"{kind}:{i}".encode()).digest() * 8
         rows.append((i, kind, bytearray(blob), f"{kind}/fake", 64, 48, 1000 + i))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_features(blob: bytes, dim: int) -> list[float]:

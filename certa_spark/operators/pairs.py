@@ -20,7 +20,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    NullType,
+    StringType,
+    StructField,
+    StructType,
+    _infer_schema,
+)
 
+from certa_spark.io import local_frame
 from certa_spark.schema import LPREFIX, RPREFIX, prefix_columns
 
 
@@ -53,10 +61,21 @@ def pair_row(
     rprefix: str = RPREFIX,
 ) -> DataFrame:
     """``get_row`` equivalent: build the 1-row wide pair DataFrame from
-    two records given as dicts (certa/utils.py:4-10)."""
+    two records given as dicts (certa/utils.py:4-10). Columns are
+    sorted by name and typed from the values; a missing (``None``)
+    value types its column as string. The frame is a local relation
+    (:func:`certa_spark.io.local_frame`)."""
     row = {**{lprefix + k: v for k, v in l_record.items()},
            **{rprefix + k: v for k, v in r_record.items()}}
-    return spark.createDataFrame([row])
+    schema = StructType(
+        [
+            StructField(f.name, StringType())
+            if isinstance(f.dataType, NullType)
+            else f
+            for f in _infer_schema(row)
+        ]
+    )
+    return local_frame(spark, [tuple(row[f.name] for f in schema)], schema)
 
 
 def merge_sources(

@@ -458,17 +458,6 @@ def _d2(a: Column, b: Column) -> Column:
     )
 
 
-def _codebook_df(df: DataFrame, codebooks: list[list[list[float]]]):
-    rows = [
-        (s, c, [float(x) for x in code])
-        for s, book in enumerate(codebooks)
-        for c, code in enumerate(book)
-    ]
-    return df.sparkSession.createDataFrame(
-        rows, "sub int, code int, cvec array<double>"
-    )
-
-
 def _subvectors(
     df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int, out_id: str
 ) -> DataFrame:

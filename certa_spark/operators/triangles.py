@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from certa_spark.io import local_frame
 from certa_spark.matching import Matcher
 from certa_spark.schema import LPREFIX, RPREFIX
 
@@ -238,8 +239,10 @@ def is_flip(row: dict, class_to_explain: int) -> bool:
 
 
 def _score(spark: SparkSession, matcher: Matcher, rows: list[dict], pair_cols):
-    """One model round: a Spark frame of ``rows`` goes through
-    ``matcher.predict`` and the scores are written back into the rows."""
+    """One model round: a local relation of ``rows`` goes through
+    ``matcher.predict`` and the scores are written back into the rows.
+    With a JVM-expression matcher the collect runs on the driver and
+    launches no Spark job."""
     if not rows:
         return
     strings = ArrayType(StringType())
@@ -262,7 +265,7 @@ def _score(spark: SparkSession, matcher: Matcher, rows: list[dict], pair_cols):
         )
         for k, r in enumerate(rows)
     ]
-    frame = spark.createDataFrame(data, schema, verifySchema=False)
+    frame = local_frame(spark, data, schema)
     scored = matcher.predict(frame).select("_row", "match_score", "nomatch_score")
     for k, match, nomatch in scored.collect():
         rows[k]["match_score"] = match

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 from certa_spark.functions import textstats as TS
 from certa_spark.functions.hashing import duck_hash64
 from certa_spark.functions.litfast import array_lit as _array_lit
+from certa_spark.io import local_frame
 from certa_spark.operators import dedup as DD
 from certa_spark.operators import widen_if_narrow
 from certa_spark.operators import similarity as SIM
@@ -3536,7 +3537,8 @@ def q_mojito_token_saliency(spark, sf_dir) -> DataFrame:
     out = explain_pair(
         spark, l_rec, r_rec, NativeCosineMatcher(), n_samples=128
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["side"], r["attr"], r["token"], round(r["weight"], 6)) for r in out],
         "side string, attr string, token string, weight double",
     )
@@ -3559,7 +3561,8 @@ def q_shap_token_saliency(spark, sf_dir) -> DataFrame:
         spark, l_rec, r_rec, NativeCosineMatcher(), n_samples=128
     )
     top = out[:5]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["side"], r["attr"], r["token"], round(r["weight"], 6)) for r in top],
         "side string, attr string, token string, weight double",
     )
@@ -6321,8 +6324,8 @@ def q_flagship_batch_saliency(spark, sf_dir) -> DataFrame:
         for i, r in enumerate(res)
         for attr, v in sorted(r.saliency_dict.items())
     ]
-    return spark.createDataFrame(
-        rows, "instance long, attr string, saliency double"
+    return local_frame(
+        spark, rows, "instance long, attr string, saliency double"
     )
 
 
@@ -6875,7 +6878,8 @@ def q_doc_bpe_merges(spark, sf_dir) -> DataFrame:
     from certa_spark.operators.vocab import learn_merges
 
     merges, _ = learn_merges(_t(spark, sf_dir, "documents"), iters=3)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(i), p, int(n)) for i, p, n in merges],
         "iter long, pair string, n long",
     )
@@ -9180,7 +9184,8 @@ def q_graph_modularity(spark, sf_dir) -> DataFrame:
     m, sec, sdc2 = int(s["m"]), int(s["sum_ec"]), int(d["sum_dc2"])
     q_exact = sec / m - sdc2 / ((4.0 * m) * m)
     ok = abs(q_fn - q_exact) < 1e-9
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m, sec, sdc2, math.floor(q_exact * 1e9 + 0.5) / 1e9, bool(ok))],
         "m long, sum_ec long, sum_dc2 long, q double, fn_within_tol boolean",
     )
@@ -9250,8 +9255,8 @@ def q_embedding_kmeans(spark, sf_dir) -> DataFrame:
                 math.floor(mean * 1e6 + 0.5) / 1e6,
             )
         )
-    return spark.createDataFrame(
-        rows, "cluster int, n long, c_norm double, c_mean double"
+    return local_frame(
+        spark, rows, "cluster int, n long, c_norm double, c_mean double"
     )
 
 
@@ -10145,20 +10150,15 @@ def q_part_louvain(spark, sf_dir) -> DataFrame:
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    s = out.agg(
-        F.count("*").cast("long").alias("n_nodes"),
-        F.countDistinct("community").cast("long").alias("n_comms"),
-        F.sum("community").cast("long").alias("comm_checksum"),
-    ).first()
-    top = (
-        out.groupBy("community").agg(F.count("*").alias("n"))
-        .agg(F.max("n").cast("long")).first()[0]
-    )
-    return spark.createDataFrame(
+    # one action: the community sizes, folded on the driver
+    sizes = dict(out.groupBy("community").agg(F.count("*")).collect())
+    named = {c: n for c, n in sizes.items() if c is not None}
+    return local_frame(
+        spark,
         [
             (
-                int(s["n_nodes"]), int(s["n_comms"]), int(top),
-                int(s["comm_checksum"]),
+                sum(sizes.values()), len(named), max(sizes.values()),
+                sum(c * n for c, n in named.items()),
                 math.floor(hist[-1] * 1e9 + 0.5) / 1e9,
             )
         ],

@@ -6,9 +6,21 @@ from certa_spark.operators.pairs import (
     composite_id,
     merge_sources,
     parse_composite_id,
+    pair_row,
     parse_member,
     robust_augment,
 )
+
+
+def test_pair_row_types_null_attribute_as_string(spark):
+    """Columns sorted by name and typed from the values; a missing
+    value types its column as string instead of failing inference."""
+    df = pair_row(spark, {"id": 1, "name": None}, {"id": 2, "name": "c"})
+    assert df.schema.simpleString() == (
+        "struct<ltable_id:bigint,ltable_name:string,"
+        "rtable_id:bigint,rtable_name:string>"
+    )
+    assert [tuple(r) for r in df.collect()] == [(1, None, 2, "c")]
 
 
 def test_merge_sources_matches_manual_join(spark, er_tables):
