@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from certa_spark.functions.text import bow_cosine
-from certa_spark.schema import LPREFIX, RPREFIX
+from certa_spark.functions.text import bow_cosine_of
+from certa_spark.schema import LPREFIX, RPREFIX, side_attributes
 
 SCORE_COLS = ("nomatch_score", "match_score")
 
@@ -44,15 +44,6 @@ class Matcher(Protocol):
     cheap: bool
 
 
-def _side_text(df: DataFrame, prefix: str) -> F.Column:
-    cols = [
-        c
-        for c in df.columns
-        if c.startswith(prefix) and c != prefix + "id"
-    ]
-    return F.concat_ws(" ", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols])
-
-
 class NativeCosineMatcher:
     """Deterministic matcher: match_score = BoW cosine of the two sides'
     concatenated attribute text (FIXTURES.md §2; same formula as
@@ -65,8 +56,9 @@ class NativeCosineMatcher:
         self.rprefix = rprefix
 
     def predict(self, pairs: DataFrame) -> DataFrame:
-        score = bow_cosine(
-            _side_text(pairs, self.lprefix), _side_text(pairs, self.rprefix)
+        score = bow_cosine_of(
+            side_attributes(pairs.columns, self.lprefix),
+            side_attributes(pairs.columns, self.rprefix),
         )
         return pairs.withColumn("match_score", score).withColumn(
             "nomatch_score", 1.0 - F.col("match_score")

@@ -13,22 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from certa_spark.functions.text import bow_cosine_tokens, tokenize
+from certa_spark.functions.text import bow_cosine_tokens, side_text, tokenize
 from certa_spark.operators.dedup import jaccard
-from certa_spark.schema import LPREFIX, RPREFIX
-
-
-def _side_text(columns: list[str], prefix: str) -> F.Column:
-    cols = [c for c in columns if c.startswith(prefix) and c != prefix + "id"]
-    return F.concat_ws(
-        " ", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]
-    )
+from certa_spark.schema import LPREFIX, RPREFIX, side_attributes
 
 
 def pair_features(pairs: DataFrame, lprefix: str = LPREFIX, rprefix: str = RPREFIX) -> DataFrame:
     """Similarity feature block — pure Column expressions."""
-    lt = tokenize(_side_text(pairs.columns, lprefix))
-    rt = tokenize(_side_text(pairs.columns, rprefix))
+    lt = tokenize(side_text(side_attributes(pairs.columns, lprefix)))
+    rt = tokenize(side_text(side_attributes(pairs.columns, rprefix)))
     ld, rd = F.array_distinct(lt), F.array_distinct(rt)
     inter = F.size(F.array_intersect(ld, rd)).cast("double")
     return (

@@ -37,18 +37,18 @@ from certa_spark import tmpcache
 from pyspark.sql.window import Window
 
 from certa_spark.functions.hashing import hash32
-from certa_spark.functions.text import bow_cosine
+from certa_spark.functions.text import bow_cosine_of, side_text
 from certa_spark.matching import Matcher
 from certa_spark.operators.pairs import composite_id
-from certa_spark.schema import LPREFIX, RPREFIX
+from certa_spark.schema import LPREFIX, RPREFIX, side_attributes
 
 MAX_BATCHES = 20  # certa/local_explain.py:113
 
 
-def _text_expr(cols: list[str]) -> F.Column:
-    return F.concat_ws(
-        " ", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]
-    )
+def probe_text(rec: dict) -> str:
+    """A probe record's attribute values joined by spaces — the text
+    its candidates are ranked against (ids and labels left out)."""
+    return " ".join(str(v) for k, v in rec.items() if k not in ("id", "label"))
 
 
 def candidate_pairs(
@@ -68,37 +68,13 @@ def candidate_pairs(
         probe_pfx, src_pfx = lprefix, rprefix
     else:
         probe_pfx, src_pfx = rprefix, lprefix
-    out = source.select(
-        *[F.col(c).cast("string").alias(src_pfx + c) for c in source.columns]
+    return source.select(
+        *[F.col(c).cast("string").alias(src_pfx + c) for c in source.columns],
+        *[
+            F.lit(None if v is None else str(v)).alias(probe_pfx + k)
+            for k, v in probe.items()
+        ],
     )
-    for k, v in probe.items():
-        out = out.withColumn(probe_pfx + k, F.lit(None if v is None else str(v)))
-    return out
-
-
-def scan_candidates(
-    pairs: DataFrame,
-    matcher: Matcher,
-    find_positives: bool,
-    num_candidates: int,
-    score_side_prefix: str,
-    probe_text: str,
-    max_predict: int = -1,
-    batched: bool = True,
-    seed: int = 42,
-) -> DataFrame:
-    """T1+T3 — rank candidates by cosine to the probe, replay the
-    reference's batched early-exit scan, return qualifying scored rows.
-
-    ``score_side_prefix`` is the prefix of the candidate (non-probe)
-    side; ``probe_text`` the probe's concatenated attribute text.
-    Single-side convenience wrapper over :func:`scan_candidates_dual`.
-    """
-    result, _ = scan_candidates_dual(
-        [(pairs, score_side_prefix, probe_text, seed, "only")],
-        matcher, find_positives, num_candidates, max_predict, batched,
-    )
-    return result.drop("_side_tag")
 
 
 def scan_candidates_dual(
@@ -135,23 +111,23 @@ def scan_candidates_dual(
     batch = num_candidates * 4
     frames = []
     for pairs, pfx, ptext, seed, tag in parts:
-        side_cols = [
-            c for c in pairs.columns if c.startswith(pfx) and c != pfx + "id"
-        ]
         df = pairs
         if max_predict > 0:
             # reference: random subsample before ranking (local_explain.py:103-104)
             df = (
-                df.withColumn("_smp", hash32(_text_expr(df.columns), seed))
+                df.withColumn("_smp", hash32(side_text(df.columns), seed))
                 .orderBy("_smp")
                 .limit(max_predict)
                 .drop("_smp")
             )
+        # the probe text enters as a literal column, so the memoized
+        # score depends only on column names; the optimizer folds the
+        # probe side to a constant and tokenizes only the candidates
+        score = bow_cosine_of(("_ptext",), side_attributes(pairs.columns, pfx))
         frames.append(
-            df.withColumn(
-                "_score", bow_cosine(F.lit(ptext), _text_expr(side_cols))
-            )
-            .withColumn("_side_tag", F.lit(tag))
+            df.withColumn("_ptext", F.lit(ptext))
+            .withColumns({"_score": score, "_side_tag": F.lit(tag)})
+            .drop("_ptext")
             # ascending sort of the sign-folded score == the per-part
             # direction (desc for find-positives); ties fall to the id
             # tiebreak either way, so ranks match the per-direction sort
@@ -261,9 +237,6 @@ def get_support(
     explain).
     """
     num_candidates = int(num_triangles / 2)
-
-    def probe_text(rec: dict) -> str:
-        return " ".join(str(v) for k, v in rec.items() if k not in ("id", "label"))
 
     parts = []
     if use_q:
@@ -460,9 +433,6 @@ def support_predictions_batch(
     from certa_spark.operators.pairs import pair_row
 
     num_candidates = int(num_triangles / 2)
-
-    def probe_text(rec: dict) -> str:
-        return " ".join(str(v) for k, v in rec.items() if k not in ("id", "label"))
 
     parts = []
     fp_by_tag: dict[str, bool] = {}

@@ -38,9 +38,10 @@ def strip_prefix_columns(df: DataFrame, prefix: str) -> DataFrame:
     return df.select(*[F.col(c).alias(strip_prefix(c, prefix)) for c in df.columns])
 
 
-def side_columns(df: DataFrame, prefix: str) -> list[str]:
-    """P6 — columns belonging to one side (certa/local_explain.py:108)."""
-    return [c for c in df.columns if c.startswith(prefix)]
+def side_attributes(columns: list[str], prefix: str) -> list[str]:
+    """P6 — attribute columns of one side, its id excluded
+    (certa/local_explain.py:108)."""
+    return [c for c in columns if c.startswith(prefix) and c != prefix + "id"]
 
 
 def pair_attributes(

@@ -314,6 +314,39 @@ def test_warm_explain_job_budget(spark, er_tables):
     assert len(jobs) <= 7, len(jobs)
 
 
+def test_warm_explain_py4j_budget(spark, er_tables, monkeypatch):
+    """A warm explain makes at most 2,194 py4j round trips on its own
+    thread, the count measured when this budget was set (the count is
+    deterministic). Every Column built on the driver costs about a
+    dozen round trips, so the cosine expression (about 450 per build)
+    is built once per column layout. Before that, the cosine was
+    rebuilt for both scan parts and every matcher call, and the same
+    explain made 4,979. Releases of JVM objects are sent later by py4j's
+    finalizer thread, at times of its own, so they are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    m = NativeCosineMatcher()
+    l, r = dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[0]))
+    ex.explain(l, r, m, num_triangles=10)
+    me = threading.get_ident()
+    calls = [0]
+    for cls in (ClientServerConnection, GatewayConnection):
+        def counted(self, command, _send=cls.send_command):
+            if threading.get_ident() == me:
+                calls[0] += 1
+            return _send(self, command)
+
+        monkeypatch.setattr(cls, "send_command", counted)
+    res = ex.explain(l, r, m, num_triangles=10)
+    assert len(res.triangles) > 0
+    assert calls[0] <= 2194, calls[0]
+
+
 def test_costly_matcher_rows_scored(spark, er_tables):
     """A costly (``cheap=False``) pandas model scores exactly the rows
     the reference's per-depth early exit allows — the support scan, the

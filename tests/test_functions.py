@@ -32,14 +32,34 @@ CASES = [
     ("", ""),
     ("a a a b", "a b b b"),
     ("Punct, marks! here?", "punct marks here"),
+    ("x x y y y z z", "y y x x x x w z"),
+    ("red green blue", "blue Red green yellow"),
 ]
 
 
 def test_bow_cosine_matches_pandas(spark):
+    """Bit for bit: the term frequencies are integers, so both engines
+    sum them exactly and then take the same square roots and quotient."""
     df = spark.createDataFrame(CASES, ["a", "b"])
     got = df.select(bow_cosine(F.col("a"), F.col("b")).alias("s")).collect()
     for (a, b), row in zip(CASES, got):
-        assert abs(row["s"] - py_cosine(a, b)) < 1e-9, (a, b)
+        assert row["s"] == py_cosine(a, b), (a, b)
+
+
+def test_bow_cosine_tokenizes_each_side_once(spark):
+    """Each side's token array is bound once per row, so the optimized
+    plan holds one regex tokenization per side; a literal side folds to
+    a constant and leaves one."""
+    df = spark.createDataFrame(CASES, ["a", "b"])
+
+    def n_regex(q):
+        plan = q._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("regexp_extract_all")
+
+    both = bow_cosine(F.col("a"), F.col("b")).alias("s")
+    assert n_regex(df.select(both)) == 2
+    probe = df.withColumn("p", F.lit("apple iphone"))
+    assert n_regex(probe.select(bow_cosine(F.col("p"), F.col("b")).alias("s"))) == 1
 
 
 def test_token_diff(spark):

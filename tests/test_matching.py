@@ -27,6 +27,35 @@ def test_native_matches_pandas_twin(spark, er_tables):
     assert ((got["match_score"] + got["nomatch_score"] - 1.0).abs() < 1e-12).all()
 
 
+def test_native_cosine_built_once_per_layout(spark, er_tables, monkeypatch):
+    """Frames with the same pair columns share one cosine Column; a
+    frame with other columns gets its own."""
+    import certa_spark.functions.text as T
+
+    built = []
+    build = T.bow_cosine
+
+    def counting(a, b, lowercase=True):
+        col = build(a, b, lowercase)
+        built.append(col)
+        return col
+
+    monkeypatch.setattr(T, "bow_cosine", counting)
+    T._bow_cosine_of.cache_clear()
+    m = NativeCosineMatcher()
+    wide = _pairs_df(spark, er_tables)
+    m.predict(wide)
+    m.predict(_pairs_df(spark, er_tables, n=5))
+    assert len(built) == 1
+    narrow = m.predict(wide.drop("ltable_price", "rtable_price"))
+    assert len(built) == 2 and built[0] is not built[1]
+    assert T.bow_cosine_of(
+        [c for c in wide.columns if c.startswith("ltable_") and c != "ltable_id"],
+        [c for c in wide.columns if c.startswith("rtable_") and c != "rtable_id"],
+    ) is built[0]
+    narrow.collect()
+
+
 def test_pandas_adapter_agrees_with_native(spark, er_tables):
     wide = _pairs_df(spark, er_tables)
     native = NativeCosineMatcher()
