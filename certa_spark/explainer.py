@@ -7,12 +7,12 @@ triangles). Pandas objects at the API edge for drop-in familiarity.
 Spark runs the phases whose size grows with the data: the support scan
 over the sources (operators/support.py) and the model rounds. What
 follows the scan is bounded by ``num_triangles``, so both ``explain``
-and ``explain_batch`` collect the support pairs (at most
-``num_triangles`` + 1 per instance) and finish on the driver: wedge
-enumeration, one batched lookup of the triangle members, the
-perturbation rows, one model round over them (one per depth for a
-costly matcher), and the flip/PSS/saliency/counterfactual folds
-(operators/triangles.py).
+and ``explain_batch`` collect the scan's capped ranked rows once and
+finish on the driver: the support search's stop rule, balancing and
+permutation (operators/support.py), wedge enumeration, one batched
+lookup of the triangle members, the perturbation rows, one model round
+over them (one per depth for a costly matcher), and the
+flip/PSS/saliency/counterfactual folds (operators/triangles.py).
 """
 
 from __future__ import annotations
@@ -130,13 +130,13 @@ class CertaExplainer:
             pc = 1 if scores["match_score"] > scores["nomatch_score"] else 0
 
             # 2. support search (explain.py:56-62)
-            support_pairs, copies_left, copies_right = support_predictions(
+            edges, copies_left, copies_right = support_predictions(
                 spark, l_tuple, r_tuple, self.lsource, self.rsource, matcher,
                 class_to_explain=pc, num_triangles=num_triangles,
                 lprefix=lprefix, rprefix=rprefix, use_w=left, use_q=right,
                 max_predict=max_predict, use_all=self.use_all, seed=self.seed,
             )
-            triangles = T.wedges(support_pairs.select("id", "label").collect())
+            triangles = T.wedges(edges)
             if not triangles:
                 return _empty()
 
@@ -234,25 +234,22 @@ class CertaExplainer:
             pcs[r["_i"]] = 1 if r["match_score"] > r["nomatch_score"] else 0
 
         # 2. fused support scan for all instances
-        all_support, n_support = support_predictions_batch(
+        edges, n_support = support_predictions_batch(
             spark, instances, self.lsource, self.rsource, matcher, pcs,
             num_triangles, lprefix, rprefix, max_predict, self.seed,
+            self.use_all,
         )
-        edges: list[list] = [[] for _ in instances]
-        for r in all_support.select("_probe", "id", "label").collect():
-            edges[r["_probe"]].append((r["id"], r["label"]))
         extensions: list = [None] * len(instances)
         for i, (l_t, r_t) in enumerate(instances):
             if n_support[i] < num_triangles:
                 # the DA fallback's augmentation rescan belongs to the
                 # single-instance support path
-                support_i, copies_left, copies_right = support_predictions(
+                edges[i], copies_left, copies_right = support_predictions(
                     spark, l_t, r_t, self.lsource, self.rsource, matcher,
                     class_to_explain=pcs[i], num_triangles=num_triangles,
                     lprefix=lprefix, rprefix=rprefix, max_predict=max_predict,
                     use_all=self.use_all, seed=self.seed,
                 )
-                edges[i] = support_i.select("id", "label").collect()
                 if copies_left is not None:
                     extensions[i] = (copies_right, copies_left)
 

@@ -16,6 +16,8 @@ engines.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -34,6 +36,13 @@ def _seeded(col: Column, seed: int | None) -> Column:
 def hash32(col: Column, seed: int | None = None) -> Column:
     """Deterministic 32-bit hash as a non-negative long."""
     return F.conv(F.substring(F.md5(_seeded(col, seed)), 1, 8), 16, 10).cast("long")
+
+
+def md5_hash32(value: str, seed: int | None = None) -> int:
+    """Driver-side twin of :func:`hash32` for one string: the same md5
+    prefix, so equal to the Spark value bit for bit."""
+    text = value if seed is None else f"{seed}:{value}"
+    return int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8], 16)
 
 
 def hash64(col: Column, seed: int | None = None) -> Column:

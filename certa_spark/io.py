@@ -19,6 +19,8 @@ rows) enter Spark through :func:`local_frame`.
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +60,23 @@ def local_frame(
         schema=arrow,
     )
     return spark.createDataFrame(table, schema)
+
+
+_DERIVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def derived(
+    source: DataFrame, key: Hashable, build: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """``build(source)``, built once per (source, key) and dropped with
+    ``source``. A projection over fixed column names costs about a dozen
+    py4j round trips per Column to build, so per-call paths reuse it and
+    add only their per-call literals. ``build`` must be pure: two
+    threads may both build on a first call, and either result serves."""
+    by_key = _DERIVED.setdefault(source, {})
+    if key not in by_key:
+        by_key[key] = build(source)
+    return by_key[key]
 
 
 def read_entity_csv(

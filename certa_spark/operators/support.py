@@ -9,20 +9,27 @@ local_explain.py:82-137): replicate the probe against every opposite
 row (J2), rank by bag-of-words cosine (T1), then scan the ranked list
 in batches of ``4*num_candidates`` (max 20), calling the model per
 batch and stopping once ``num_candidates`` qualifying rows are found
-(T3 early exit).
+(T3 early exit). Then balance the two sides, permute, and cap the
+result at ``num_triangles`` (local_explain.py:63-64,162-197).
 
-Spark-first re-expression — ONE distributed pass, exact same stopping
-semantics:
-  1. probe columns are literals -> no join at all for J2;
-  2. ranking cap: only the first ``batch*20`` rows in score order can
-     ever be scanned, so ``orderBy(score).limit(batch*20)`` (a
-     distributed TopK, no global sort) bounds the data;
-  3. model scores for the capped set are computed in one pass
-     (one ``mapInPandas`` job instead of <=20 driver round-trips);
-  4. the batched early-exit is replayed exactly with window arithmetic:
-     rows keep batch index ``floor(rank/batch)``; the scan "stops" at
-     the first batch where the cumulative qualifying count reaches
-     ``num_candidates``; rows of later batches are dropped.
+Spark runs the part that grows with the sources, as ONE pass ending
+in ONE collect:
+  1. probe columns are literals over a source projection built once
+     per source -> no join at all for J2;
+  2. ranking cap: only the first ``batch*20`` rows per side in score
+     order can ever be scanned, so a per-side ``row_number`` window
+     (executed as a partial top-k before the shuffle) bounds the data;
+  3. model scores for the capped set are computed in one model round
+     instead of <=20 driver round trips;
+  4. the collect brings back each ranked row's side, rank, ids,
+     qualifying flag and label — at most ``batch*20`` rows per side.
+
+The driver finishes over those rows with plain functions shared by the
+single-instance and batch paths: the stop rule (:func:`stop_rule`),
+balancing (:func:`balance`), and the permutation, head/tail cap and
+head edge (:func:`support_edges`). The seeded hash orders use
+:func:`md5_hash32`, the driver twin of Spark's ``hash32``. Both paths
+return ``(id, label)`` edge lists for ``triangles.wedges``.
 
 At 100TB the cosine ranking itself is the bottleneck; the scale path is
 MinHash-LSH candidate pruning (certa_spark.operators.similarity) feeding
@@ -36,19 +43,30 @@ from pyspark.sql import functions as F
 from certa_spark import tmpcache
 from pyspark.sql.window import Window
 
-from certa_spark.functions.hashing import hash32
+from certa_spark.functions.hashing import hash32, md5_hash32
 from certa_spark.functions.text import bow_cosine_of, side_text
+from certa_spark.io import derived
 from certa_spark.matching import Matcher
-from certa_spark.operators.pairs import composite_id
 from certa_spark.schema import LPREFIX, RPREFIX, side_attributes
 
 MAX_BATCHES = 20  # certa/local_explain.py:113
+
+# a support candidate: (left id, right id, label) with the ids as strings
+Candidate = tuple[str, str, int]
+# a support pair: (composite id "0@<lid>#1@<rid>", label)
+Edge = tuple[str, int]
 
 
 def probe_text(rec: dict) -> str:
     """A probe record's attribute values joined by spaces — the text
     its candidates are ranked against (ids and labels left out)."""
     return " ".join(str(v) for k, v in rec.items() if k not in ("id", "label"))
+
+
+def pair_id(lid, rid) -> str:
+    """F1 — the composite pair id ``"0@<lid>#1@<rid>"``
+    (certa/local_explain.py:44,190-191)."""
+    return f"0@{lid}#1@{rid}"
 
 
 def candidate_pairs(
@@ -61,20 +79,47 @@ def candidate_pairs(
     """J2 — pair the probe record with every row of the opposite source.
 
     The probe enters the plan as literal columns (cheaper than even a
-    broadcast nested-loop join). ``probe_side='left'`` pairs the probe
-    as ltable_* with each source row as rtable_*.
+    broadcast nested-loop join) after the source's string projection,
+    which is built once per source and prefix. ``probe_side='left'``
+    pairs the probe as ltable_* with each source row as rtable_*.
     """
     if probe_side == "left":
         probe_pfx, src_pfx = lprefix, rprefix
     else:
         probe_pfx, src_pfx = rprefix, lprefix
-    return source.select(
-        *[F.col(c).cast("string").alias(src_pfx + c) for c in source.columns],
+    projected = derived(
+        source,
+        ("candidate_pairs", src_pfx),
+        lambda s: s.select(
+            *[F.col(c).cast("string").alias(src_pfx + c) for c in s.columns]
+        ),
+    )
+    return projected.select(
+        "*",
         *[
             F.lit(None if v is None else str(v)).alias(probe_pfx + k)
             for k, v in probe.items()
         ],
     )
+
+
+def stop_rule(
+    ranked: list[tuple[bool, Candidate]], num_candidates: int
+) -> list[Candidate]:
+    """T3 — the reference's batched early exit (local_explain.py:
+    112-128) over one side's ``(qualifies, candidate)`` rows in rank
+    order: batches of ``4*num_candidates``, at most ``MAX_BATCHES`` full
+    ones (a partial last batch is never read), stopping after the first
+    batch where the running qualifying count reaches ``num_candidates``.
+    Returns the qualifying candidates of the batches read."""
+    batch = 4 * num_candidates
+    splits = min(MAX_BATCHES, len(ranked) // batch)
+    found: list[Candidate] = []
+    for at in range(0, splits * batch, batch):
+        found += [c for q, c in ranked[at : at + batch] if q]
+        if len(found) >= num_candidates:
+            break
+    return found
 
 
 def scan_candidates_dual(
@@ -84,19 +129,19 @@ def scan_candidates_dual(
     num_candidates: int,
     max_predict: int = -1,
     batched: bool = True,
-) -> tuple[DataFrame, dict[str, int]]:
-    """Both sides' T1+T3 scans fused into ONE Spark pass.
+    lprefix: str = LPREFIX,
+    rprefix: str = RPREFIX,
+) -> dict[str, list[Candidate]]:
+    """Both sides' T1+T3 scans fused into ONE Spark pass and ONE collect.
 
     ``parts``: (pairs, score_side_prefix, probe_text, seed, side_tag)
     per side. The sides are unioned under a ``_side_tag`` column so
-    ranking (window per side), the single model round, and the stop-rule
-    batch counts all run as one job chain instead of two — the per-side
-    semantics (batch = 4*num_candidates, <=20 batches, stop at
-    num_candidates qualifying, local_explain.py:112-128) are replayed
-    exactly from the per-(side, batch) counts, which also yield the
-    per-side qualifying totals for free (returned as the second value —
-    saves the two count() jobs the balancing step used to run).
-    Returns (qualifying rows with _side_tag, {side_tag: n_qualifying}).
+    ranking (window per side) and the single model round run as one job
+    chain; the collect returns each side's capped ranked rows, and
+    :func:`stop_rule` replays the per-side batch scan on the driver.
+    With ``batched=False`` (data augmentation 'always') every row is
+    scored and every qualifying row kept.
+    Returns {side_tag: qualifying candidates}.
     """
     # per-tag polarity: a plain bool applies to every part (the
     # single-instance path); a {tag: bool} dict lets one fused scan
@@ -139,10 +184,11 @@ def scan_candidates_dual(
     for f in frames[1:]:
         allc = allc.unionByName(f)
 
-    id_cols = [c for c in parts[0][0].columns if c.endswith("_id") or c.endswith("id")]
-    order = [F.col("_sord").asc()]
-    # deterministic tiebreak (pandas sort ties are arbitrary; we pin them)
-    order += [F.col(c).asc() for c in id_cols]
+    # ascending by name; deterministic id tiebreak (pandas sort ties
+    # are arbitrary; we pin them)
+    order = ["_sord"] + [
+        c for c in parts[0][0].columns if c.endswith("_id") or c.endswith("id")
+    ]
     pos_tags = [t for t, v in fp.items() if v]
     if len(pos_tags) == len(fp):
         qual = F.col("match_score") > 0.5
@@ -152,59 +198,76 @@ def scan_candidates_dual(
         qual = F.when(
             F.col("_side_tag").isin(pos_tags), F.col("match_score") > 0.5
         ).otherwise(F.col("match_score") < 0.5)
+    candidate = [
+        lprefix + "id",
+        rprefix + "id",
+        F.round(F.col("match_score")).cast("int").alias("label"),
+    ]
 
+    sides: dict[str, list] = {tag: [] for *_, tag in parts}
     if not batched:
         predicted = matcher.predict(allc.drop("_score", "_sord"))
-        result = predicted.filter(qual)
-        counts = {
-            r["_side_tag"]: r["n"]
-            for r in result.groupBy("_side_tag").agg(F.count("*").alias("n")).collect()
-        }
-        return result, {tag: counts.get(tag, 0) for *_, tag in parts}
+        for r in predicted.filter(qual).select("_side_tag", *candidate).collect():
+            sides[r[0]].append(tuple(r[1:]))
+        return sides
 
-    # rows beyond batch*MAX_BATCHES can never be scanned; row_number<=k
-    # over the per-side window is executed as WindowGroupLimit (partial
-    # top-k per partition before the shuffle)
+    # rows beyond batch*MAX_BATCHES can never be scanned; a filter on
+    # row_number() itself (not on an expression over it) is planned as
+    # WindowGroupLimit: a partial top-k per partition before the shuffle
     w = Window.partitionBy("_side_tag").orderBy(*order)
-    ranked = (
-        allc.withColumn("_rn", F.row_number().over(w) - 1)
-        .filter(F.col("_rn") < batch * MAX_BATCHES)
-        .withColumn("_batch", (F.col("_rn") / F.lit(batch)).cast("int"))
+    ranked = allc.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= batch * MAX_BATCHES
     )
-    predicted = matcher.predict(ranked.drop("_score", "_sord")).withColumn(
-        "_q", qual.cast("int")
-    )
-    # one narrow materialization; lineage truncated for the driver loop
-    predicted = predicted.repartition(4).localCheckpoint()
-    # replay the per-side stop rule on per-(side, batch) counts
     rows = (
-        predicted.groupBy("_side_tag", "_batch")
-        .agg(F.sum("_q").alias("nq"), F.count("*").alias("n"))
+        matcher.predict(ranked.drop("_score", "_sord"))
+        .select("_side_tag", "_rn", qual.alias("_q"), *candidate)
         .collect()
     )
-    per_side: dict[str, list] = {}
-    for r in rows:
-        per_side.setdefault(r["_side_tag"], []).append(r)
-    stop_filter = F.lit(False)
-    n_qual: dict[str, int] = {}
-    for *_, tag in parts:
-        batch_counts = sorted(per_side.get(tag, []), key=lambda r: r["_batch"])
-        n_total = sum(r["n"] for r in batch_counts)
-        splits = min(MAX_BATCHES, n_total // batch)
-        stop, cum = -1, 0
-        for r in batch_counts:
-            if r["_batch"] >= splits:
-                break
-            stop = r["_batch"]
-            cum += r["nq"]
-            if cum >= num_candidates:
-                break
-        n_qual[tag] = cum
-        stop_filter = stop_filter | (
-            (F.col("_side_tag") == tag) & (F.col("_batch") <= stop)
-        )
-    result = predicted.filter(stop_filter & (F.col("_q") == 1))
-    return result.drop("_q", "_rn", "_batch"), n_qual
+    for r in sorted(rows, key=lambda r: (r[0], r[1])):
+        sides[r[0]].append((bool(r[2]), tuple(r[3:])))
+    return {tag: stop_rule(side, num_candidates) for tag, side in sides.items()}
+
+
+def balance(sides: list[list[Candidate]], seed: int) -> list[Candidate]:
+    """local_explain.py:182-185 — with both sides scanned, the larger is
+    sampled down to the smaller's size (or, when the smaller found
+    none, both are kept whole). A seeded hash order over the composite
+    id, ties by the ids, stands in for pandas' random sample."""
+    if len(sides) == 2:
+        max_len = min(map(len, sides)) or max(map(len, sides))
+
+        def order(c: Candidate):
+            return md5_hash32(pair_id(c[0], c[1]), seed), c[0], c[1]
+
+        sides = [sorted(s, key=order)[:max_len] for s in sides]
+    return [c for s in sides for c in s]
+
+
+def support_edges(
+    r1: dict,
+    r2: dict,
+    class_to_explain: int,
+    support: list[Candidate],
+    num_triangles: int,
+    seed: int,
+) -> list[Edge]:
+    """local_explain.py:63-64,186 — the explained pair labelled
+    ``class_to_explain`` first, then the support pairs in a seeded
+    permutation order, ``(hash32(id, seed+13), id)``, standing in for
+    pandas' ``sample(frac=1)``. Past ``num_triangles`` pairs only the
+    first half of that order and the first half by descending hash
+    (ties by ascending id) are kept — the head/tail cap. Every support
+    pair already passed the reference's final 0.5 threshold: it
+    qualified strictly on the same side of 0.5."""
+    ids = [(pair_id(lid, rid), label) for lid, rid, label in support]
+    keyed = sorted((md5_hash32(cid, seed + 13), cid, label) for cid, label in ids)
+    if len(keyed) > num_triangles:
+        half = int(num_triangles / 2)
+        tail = sorted(range(len(keyed)), key=lambda i: (-keyed[i][0], keyed[i][1]))
+        keep = set(range(half)) | set(tail[:half])
+        keyed = [k for i, k in enumerate(keyed) if i in keep]
+    head = (pair_id(r1["id"], r2["id"]), int(class_to_explain))
+    return [head, *((cid, label) for _, cid, label in keyed)]
 
 
 def get_support(
@@ -223,19 +286,9 @@ def get_support(
     max_predict: int = -1,
     use_all: bool = False,
     seed: int = 42,
-) -> tuple[DataFrame, int]:
+) -> tuple[list[Candidate], int]:
     """certa/local_explain.py:162-197 — gather qualifying candidates on
-    both sides, balance them, permute, and keep rows past the 0.5
-    threshold. Returns (scored pair rows + composite ``id``, row count).
-
-    The row count is DRIVER-COMPUTED from the per-side qualifying
-    totals the fused scan already collected: the final polarity filter
-    is a no-op on qualifying rows (qual is strictly > / < 0.5 while the
-    threshold is >= / < 0.5 with matching polarity) and balancing keeps
-    ``min(count, max_len)`` rows per side — so callers never pay a
-    count() action over the scan output (r12: one fewer job per
-    explain).
-    """
+    both sides and balance them. Returns (support candidates, count)."""
     num_candidates = int(num_triangles / 2)
 
     parts = []
@@ -248,48 +301,12 @@ def get_support(
     if not parts:
         raise ValueError("at least one of use_w/use_q must be set")
 
-    # both sides' rank+predict+stop-rule in one fused pass; the per-side
-    # qualifying totals come from the same batch-count collect
-    scanned, n_qual = scan_candidates_dual(
+    sides = scan_candidates_dual(
         parts, matcher, find_positives, num_candidates, max_predict,
-        batched=not use_all,
+        not use_all, lprefix, rprefix,
     )
-    counts = [n_qual[tag] for *_, tag in parts]
-    n_rows = sum(counts)
-    if len(parts) == 2:
-        max_len = min(*counts) or max(*counts)
-        n_rows = sum(min(c, max_len) for c in counts)
-        if max(*counts) > max_len:
-            # reference: random sample the larger side down to max_len
-            # (local_explain.py:182-185); per-side window over a tiny
-            # input, kept in one partition so it plans no exchange
-            wb = Window.partitionBy("_side_tag").orderBy(
-                "_h", lprefix + "id", rprefix + "id"
-            )
-            scanned = (
-                scanned.coalesce(1)
-                .withColumn(
-                    "_h",
-                    hash32(
-                        composite_id(F.col(lprefix + "id"), F.col(rprefix + "id")),
-                        seed,
-                    ),
-                )
-                .withColumn("_bn", F.row_number().over(wb))
-                .filter(F.col("_bn") <= max_len)
-                .drop("_h", "_bn")
-            )
-    candidates = scanned.drop("_side_tag")
-
-    candidates = candidates.withColumn(
-        "id", composite_id(F.col(lprefix + "id"), F.col(rprefix + "id"))
-    )
-    thr = (
-        F.col("match_score") >= 0.5
-        if find_positives
-        else F.col("match_score") < 0.5
-    )
-    return candidates.filter(thr), n_rows
+    support = balance([sides[tag] for *_, tag in parts], seed)
+    return support, len(support)
 
 
 def support_predictions(
@@ -308,26 +325,19 @@ def support_predictions(
     max_predict: int = -1,
     use_all: bool = False,
     seed: int = 42,
-) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+) -> tuple[list[Edge], DataFrame | None, DataFrame | None]:
     """certa/local_explain.py:17-79 — the full support-set assembly.
 
-    Returns (support_pairs, copies_left, copies_right). Row 0 of
-    ``support_pairs`` is the explained pair itself with
-    ``label = class_to_explain``.
+    Returns (support edges, copies_left, copies_right); the first edge
+    is the explained pair itself, labelled ``class_to_explain``.
     """
     from certa_spark.operators.augment import expand_copies
-    from certa_spark.operators.pairs import pair_row
 
     find_positives = class_to_explain == 0
-    support1, n_support = get_support(
+    support, n_support = get_support(
         spark, r1, r2, lsource, rsource, matcher, find_positives,
         num_triangles, lprefix, rprefix, use_w, use_q, max_predict, use_all, seed,
     )
-    # one partition from here on: the frame is small (at most a few
-    # scan batches), and the windows and sort below then plan no
-    # exchange; uncached, because the caller collects it once — so
-    # that collect is a single job
-    support = support1.coalesce(1)
 
     copies_left = copies_right = None
     if n_support < num_triangles:
@@ -337,60 +347,15 @@ def support_predictions(
         copies_left, copies_right = expand_copies(spark, r1, r2, n_l, n_r)
         copies_left = tmpcache.track(copies_left.cache())
         copies_right = tmpcache.track(copies_right.cache())
-        support2, n_support2 = get_support(
+        support2, _ = get_support(
             spark, r1, r2, copies_right, copies_left, matcher, find_positives,
             num_triangles, lprefix, rprefix, use_w, use_q, max_predict, use_all,
             seed + 7,
         )
-        support = support.unionByName(support2).coalesce(1)
-        n_support += n_support2
+        support += support2
 
-    if n_support == 0:
-        # same schema as the non-empty path (label/_ord, no raw scores)
-        # so downstream triangle plans analyze without a row-count probe
-        empty = (
-            support.limit(0)
-            .withColumn("label", F.lit(int(class_to_explain)))
-            .drop("match_score", "nomatch_score")
-            .withColumn("_ord", F.lit(0))
-        )
-        return empty, copies_left, copies_right
-
-    # deterministic permutation stands in for pandas sample(frac=1)
-    # (local_explain.py:186); head n/2 + tail n/2 cap (line 63-64).
-    permuted = support.withColumn("_h", hash32(F.col("id"), seed + 13))
-    if n_support > num_triangles:
-        half = int(num_triangles / 2)
-        w_asc = Window.orderBy(F.col("_h").asc(), F.col("id"))
-        w_desc = Window.orderBy(F.col("_h").desc(), F.col("id"))
-        permuted = (
-            permuted.withColumn("_ra", F.row_number().over(w_asc))
-            .withColumn("_rd", F.row_number().over(w_desc))
-            .filter((F.col("_ra") <= half) | (F.col("_rd") <= half))
-            .drop("_ra", "_rd")
-        )
-    support_rows = (
-        permuted.orderBy("_h", "id")
-        .drop("_h")
-        .withColumn("label", F.round(F.col("match_score")).cast("int"))
-        .drop("match_score", "nomatch_score")
-    )
-
-    head = (
-        pair_row(spark, r1, r2, lprefix, rprefix)
-        .withColumn(
-            "id", composite_id(F.col(lprefix + "id"), F.col(rprefix + "id"))
-        )
-        .withColumn("label", F.lit(int(class_to_explain)))
-    )
-    for c in support_rows.columns:
-        if c not in head.columns:
-            head = head.withColumn(c, F.lit(None).cast("string"))
-    head = head.select(*support_rows.columns).withColumn("_ord", F.lit(0))
-    support_pairs = head.unionByName(
-        support_rows.withColumn("_ord", F.lit(1))
-    )
-    return support_pairs, copies_left, copies_right
+    edges = support_edges(r1, r2, class_to_explain, support, num_triangles, seed)
+    return edges, copies_left, copies_right
 
 
 def support_predictions_batch(
@@ -405,33 +370,26 @@ def support_predictions_batch(
     rprefix: str = RPREFIX,
     max_predict: int = -1,
     seed: int = 42,
-) -> tuple[DataFrame, list[int]]:
+    use_all: bool = False,
+) -> tuple[list[list[Edge]], list[int]]:
     """Set-oriented support assembly for a BATCH of explained pairs —
     the capability the reference's per-instance loop cannot express:
-    ONE corpus scan, ONE TopK window pass, and ONE model round cover
-    every instance's candidate search, instead of k sequential scans.
+    ONE corpus scan, ONE TopK window pass, ONE model round and ONE
+    collect cover every instance's candidate search, instead of k
+    sequential scans.
 
-    Mechanics: each instance contributes its two probe parts tagged
+    Each instance contributes its two probe parts tagged
     ``"{i}:q"``/``"{i}:w"`` to a single :func:`scan_candidates_dual`
-    call (the per-tag machinery — ranking windows, stop-rule batch
-    counts, qualifying totals — is already keyed by the tag, and the
-    per-tag ``find_positives`` dict handles instances whose predicted
-    classes differ). Balancing, thresholding, the deterministic
-    permutation, and the head/tail cap then run per instance over the
-    SHARED checkpointed scan output, with the same seeds the
-    single-instance path uses — ``explain_batch([x]) == explain(x)``
-    by construction (parity-tested).
+    call (the per-tag ``find_positives`` dict handles instances whose
+    predicted classes differ); the driver finish then runs per
+    instance with the seeds the single-instance path uses, so
+    ``explain_batch([x]) == explain(x)`` (parity-tested).
 
-    Returns ``(support_pairs_all, n_support_per_instance)`` where
-    ``support_pairs_all`` carries a ``_probe`` column (instance index;
-    filter + drop it to obtain each instance's frame — row 0 semantics
-    preserved per instance via ``_ord``). Instances whose support
-    falls short of ``num_triangles`` (the DA-fallback path) are NOT
-    assembled here — callers detect them via the returned counts and
-    run the single-instance :func:`support_predictions` for those.
+    Returns ``(edges_per_instance, n_support_per_instance)``. Instances
+    whose support falls short of ``num_triangles`` (the DA-fallback
+    path) are returned unextended — callers detect them via the counts
+    and run the single-instance :func:`support_predictions` for those.
     """
-    from certa_spark.operators.pairs import pair_row
-
     num_candidates = int(num_triangles / 2)
 
     parts = []
@@ -445,92 +403,18 @@ def support_predictions_batch(
         parts.append((c2, lprefix, probe_text(r2), seed + 1, f"{i}:w"))
         fp_by_tag[f"{i}:w"] = find_positives
 
-    scanned, n_qual = scan_candidates_dual(
-        parts, matcher, fp_by_tag, num_candidates, max_predict, batched=True
+    sides = scan_candidates_dual(
+        parts, matcher, fp_by_tag, num_candidates, max_predict,
+        not use_all, lprefix, rprefix,
     )
-
-    # per-instance balancing caps (local_explain.py:182-185), applied on
-    # the shared frame via a tag -> cap literal map
-    caps: dict[str, int] = {}
+    edges: list[list[Edge]] = []
     n_support: list[int] = []
-    for i in range(len(instances)):
-        cq, cw = n_qual[f"{i}:q"], n_qual[f"{i}:w"]
-        max_len = min(cq, cw) or max(cq, cw)
-        caps[f"{i}:q"] = caps[f"{i}:w"] = max_len
-        n_support.append(min(cq, max_len) + min(cw, max_len))
-    cap_map = F.create_map(
-        *[F.lit(x) for kv in caps.items() for x in kv]
-    )
-    wb = Window.partitionBy("_side_tag").orderBy(
-        "_h", lprefix + "id", rprefix + "id"
-    )
-    # the qualifying rows are few (at most a few scan batches per
-    # instance): one partition lets the windows below plan no exchange,
-    # so collecting the support pairs is a single job
-    balanced = (
-        scanned.coalesce(1)
-        .withColumn(
-            "_h",
-            hash32(
-                composite_id(F.col(lprefix + "id"), F.col(rprefix + "id")),
-                seed,
-            ),
-        )
-        .withColumn("_bn", F.row_number().over(wb))
-        .filter(F.col("_bn") <= F.element_at(cap_map, F.col("_side_tag")))
-        .drop("_h", "_bn")
-    )
-    candidates = (
-        balanced.withColumn(
-            "_probe", F.split(F.col("_side_tag"), ":").getItem(0).cast("int")
-        )
-        .drop("_side_tag")
-        .withColumn(
-            "id", composite_id(F.col(lprefix + "id"), F.col(rprefix + "id"))
-        )
-    )
-
-    # deterministic permutation + per-instance head/tail cap
-    # (local_explain.py:63-64,186) — windows per _probe
-    permuted = candidates.withColumn("_h", hash32(F.col("id"), seed + 13))
-    over = [i for i, n in enumerate(n_support) if n > num_triangles]
-    if over:
-        half = int(num_triangles / 2)
-        w_asc = Window.partitionBy("_probe").orderBy(F.col("_h").asc(), "id")
-        w_desc = Window.partitionBy("_probe").orderBy(F.col("_h").desc(), "id")
-        keep = (
-            ~F.col("_probe").isin(over)
-            | (F.col("_ra") <= half)
-            | (F.col("_rd") <= half)
-        )
-        permuted = (
-            permuted.withColumn("_ra", F.row_number().over(w_asc))
-            .withColumn("_rd", F.row_number().over(w_desc))
-            .filter(keep)
-            .drop("_ra", "_rd")
-        )
-    support_rows = (
-        permuted.drop("_h")
-        .withColumn("label", F.round(F.col("match_score")).cast("int"))
-        .drop("match_score", "nomatch_score")
-    )
-
-    heads = None
     for i, (r1, r2) in enumerate(instances):
-        head = (
-            pair_row(spark, r1, r2, lprefix, rprefix)
-            .withColumn(
-                "id", composite_id(F.col(lprefix + "id"), F.col(rprefix + "id"))
+        support = balance([sides[f"{i}:q"], sides[f"{i}:w"]], seed)
+        n_support.append(len(support))
+        edges.append(
+            support_edges(
+                r1, r2, classes_to_explain[i], support, num_triangles, seed
             )
-            .withColumn("label", F.lit(int(classes_to_explain[i])))
         )
-        for c in support_rows.columns:
-            if c not in head.columns and c != "_probe":
-                head = head.withColumn(c, F.lit(None).cast("string"))
-        head = head.withColumn("_probe", F.lit(i)).select(*support_rows.columns)
-        heads = head if heads is None else heads.unionByName(head)
-
-    support_pairs = heads.withColumn("_ord", F.lit(0)).unionByName(
-        support_rows.withColumn("_ord", F.lit(1))
-    )
-    return support_pairs, n_support
+    return edges, n_support

@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from certa_spark.io import local_frame
+from certa_spark.io import derived, local_frame
 from certa_spark.matching import Matcher
 from certa_spark.schema import LPREFIX, RPREFIX
 
@@ -125,6 +125,16 @@ def _member_id(member: str) -> int:
     return int(member.split("@")[1])
 
 
+def _member_values(source: DataFrame) -> DataFrame:
+    """A source as (long ``id``, ``_vals``: its attributes as strings)."""
+    return source.select(
+        F.col("id").cast("long").alias("id"),
+        F.array(
+            *[F.col(c).cast("string") for c in source.columns if c != "id"]
+        ).alias("_vals"),
+    )
+
+
 def fetch_members(
     probes: dict[int, Probe], lsource: DataFrame, rsource: DataFrame
 ) -> dict[int, list[tuple[Triangle, dict, dict, dict]]]:
@@ -144,23 +154,21 @@ def fetch_members(
             own.update((_member_id(pivot), _member_id(free)))
             other.add(_member_id(anchor))
 
-    def lookup(df, attrs, src, probe, ids):
-        rid = F.col("id").cast("long")
-        return df.filter(rid.isin(sorted(ids))).select(
-            F.lit(probe).alias("_probe"),
-            F.lit(src).alias("_src"),
-            rid.alias("id"),
-            F.array(*[F.col(c).cast("string") for c in attrs]).alias("_vals"),
+    def lookup(values, src, probe, ids):
+        # the ids are ints: one SQL predicate, not a py4j literal per id
+        in_list = ",".join(map(str, sorted(ids))) or "NULL"
+        return values.filter(f"id IN ({in_list})").select(
+            F.lit(probe).alias("_probe"), F.lit(src).alias("_src"), "id", "_vals"
         )
 
     parts = []
-    for src, (source, attrs) in enumerate(((lsource, l_attrs), (rsource, r_attrs))):
+    for src, source in enumerate((lsource, rsource)):
         ids = set().union(*(need[p][src] for p in probes))
-        parts.append(lookup(source, attrs, src, -1, ids))
+        parts.append(lookup(derived(source, "members", _member_values), src, -1, ids))
         for p, probe in probes.items():
             if probe.extensions is not None:
                 ext = probe.extensions[src].select(*source.columns)
-                parts.append(lookup(ext, attrs, src, p, need[p][src]))
+                parts.append(lookup(_member_values(ext), src, p, need[p][src]))
     frame = parts[0]
     for part in parts[1:]:
         frame = frame.unionByName(part)

@@ -8,7 +8,9 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from certa_spark.functions.hashing import duck_hash32, duck_hash64, hash32, hash64
+from certa_spark.functions.hashing import (
+    duck_hash32, duck_hash64, hash32, hash64, md5_hash32,
+)
 from certa_spark.functions.text import bow_cosine, token_diff
 from certa_spark.functions import textstats as TS
 
@@ -86,6 +88,18 @@ def test_hash_cross_engine(spark):
         assert row["h32"] == d32, v
         assert row["h32s"] == d32s, v
         assert row["h64"] == d64, v
+
+
+def test_md5_hash32_matches_spark(spark):
+    """The driver twin equals Spark's ``hash32``, seeded and unseeded,
+    on ASCII, non-ASCII, empty and composite pair-id strings."""
+    vals = ["abc", "ünïcode 漢字", "", "0@12#1@7", "0@3#1@1000000000017"]
+    df = spark.createDataFrame([(v,) for v in vals], ["v"])
+    for row in df.select(
+        "v", hash32(F.col("v")).alias("h"), hash32(F.col("v"), 55).alias("hs")
+    ).collect():
+        assert md5_hash32(row["v"]) == row["h"], row["v"]
+        assert md5_hash32(row["v"], 55) == row["hs"], row["v"]
 
 
 def test_textstats_cross_engine(spark):

@@ -97,3 +97,29 @@ def test_no_pickled_rdd_on_explain_or_operators(spark, er_tables, monkeypatch):
     assert ex.explain(l, r, m, num_triangles=10).triangles
     assert q_embedding_kmeans(spark, SF).count() == 8
     assert q_part_louvain(spark, SF).count() == 1
+
+
+def test_derived_built_once_and_dropped_with_its_source(spark):
+    """``io.derived`` builds once per (source, key), and its memo keeps
+    no source alive."""
+    import gc
+    import weakref
+
+    from certa_spark.io import derived
+
+    source = spark.range(3)
+    builds = []
+
+    def build(s):
+        builds.append(s)
+        return s.select("id")
+
+    first = derived(source, "k", build)
+    assert derived(source, "k", build) is first
+    assert derived(source, "other", build) is not first
+    assert len(builds) == 2
+    alive = weakref.ref(source)
+    del source, builds
+    gc.collect()
+    assert alive() is None
+    assert first.collect()  # the derived frame outlives its source
