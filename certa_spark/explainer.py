@@ -4,11 +4,12 @@ Same contract as the reference: given two records and a matcher,
 produce (saliency, probabilities-of-sufficiency, counterfactuals,
 triangles). Pandas objects at the API edge for drop-in familiarity.
 
-Spark runs the phases whose size grows with the data: the support scan
-over the sources (operators/support.py) and the model rounds. What
-follows the scan is bounded by ``num_triangles``, so both ``explain``
-and ``explain_batch`` collect the scan's capped ranked rows once and
-finish on the driver: the support search's stop rule, balancing and
+``explain`` is the one-instance case of ``explain_batch``: one pipeline
+serves both. Spark runs the phases whose size grows with the data: the
+support scan over the sources (operators/support.py) and the model
+rounds. What follows the scan is bounded by ``num_triangles``, so the
+pipeline collects the scan's capped ranked rows once and finishes on
+the driver: the support search's stop rule, balancing and
 permutation (operators/support.py), wedge enumeration, one batched
 lookup of the triangle members, the perturbation rows, one model round
 over them (one per depth for a costly matcher), and the
@@ -28,13 +29,12 @@ from certa_spark import tmpcache
 from certa_spark.matching import Matcher, NativeCosineMatcher
 from certa_spark.operators import triangles as T
 from certa_spark.operators.augment import generate_modified
-from certa_spark.operators.pairs import pair_row
-from certa_spark.operators.support import (
-    support_predictions,
-    support_predictions_batch,
-)
+from certa_spark.operators.pairs import pair_rows
+from certa_spark.operators.support import support_predictions
 from certa_spark.schema import LPREFIX, RPREFIX
 
+# instances per fused support scan in explain_batch
+SCAN_BATCH_SIZE = 8
 # counterfactual frame columns after the pair attributes
 CF_TAIL = (*T.BOOKKEEPING, "match_score", "nomatch_score", "depth", "attr_count")
 
@@ -77,13 +77,12 @@ class CertaExplainer:
         early-exit candidate scan (use_all)."""
         self.spark = spark
         self.seed = seed
-        lsource = lsource.select(
-            F.col("id").cast("long").alias("id"),
-            *[F.col(c).cast("string").alias(c) for c in lsource.columns if c != "id"],
-        )
-        rsource = rsource.select(
-            F.col("id").cast("long").alias("id"),
-            *[F.col(c).cast("string").alias(c) for c in rsource.columns if c != "id"],
+        lsource, rsource = (
+            s.select(
+                F.col("id").cast("long").alias("id"),
+                *[F.col(c).cast("string").alias(c) for c in s.columns if c != "id"],
+            )
+            for s in (lsource, rsource)
         )
         if data_augmentation in ("always", "on_demand"):
             n_l, n_r = lsource.count(), rsource.count()
@@ -111,51 +110,21 @@ class CertaExplainer:
         max_predict: int = -1,
         debug: bool = False,
     ) -> Explanation:
+        """Explain one pair (explain.py:11-158): the one-instance case
+        of :meth:`explain_batch`. ``left``/``right`` say whether the
+        left / right source is scanned for support pairs (the
+        reference's w / q probes); ``debug`` adds the per-triangle
+        lattices."""
         # the DA fallback's cached probe copies register with this scope
         # and are unpersisted when the explanation (pure driver-side
         # data) is returned — see tmpcache.py for why leaking them
         # degrades long sessions
         with tmpcache.scope():
-            spark = self.spark
-            if matcher is None:
-                matcher = NativeCosineMatcher(lprefix, rprefix)
-
-            # 1. original prediction (explain.py:54-55)
-            r1r2 = pair_row(spark, l_tuple, r_tuple, lprefix, rprefix)
-            scores = (
-                matcher.predict(r1r2)
-                .select("nomatch_score", "match_score")
-                .collect()[0]
-            )
-            pc = 1 if scores["match_score"] > scores["nomatch_score"] else 0
-
-            # 2. support search (explain.py:56-62)
-            edges, copies_left, copies_right = support_predictions(
-                spark, l_tuple, r_tuple, self.lsource, self.rsource, matcher,
-                class_to_explain=pc, num_triangles=num_triangles,
-                lprefix=lprefix, rprefix=rprefix, use_w=left, use_q=right,
-                max_predict=max_predict, use_all=self.use_all, seed=self.seed,
-            )
-            triangles = T.wedges(edges)
-            if not triangles:
-                return _empty()
-
-            # 3. perturb+predict over the triangles; DA copies of r2
-            # extend the left source and copies of r1 the right one
-            # (explain.py:67)
-            if attr_length <= 0:
-                attr_length = min(len(l_tuple) - 1, len(r_tuple) - 1)
-            extensions = (
-                None if copies_left is None else (copies_right, copies_left)
-            )
-            result = T.perturb_predict(
-                spark, triangles, self.lsource, self.rsource, matcher, pc,
-                attr_length, lprefix, rprefix, extensions,
-            )
-            return self._explanation(
-                triangles, result, attr_length, lprefix, rprefix,
-                float(scores["match_score"]) if debug else None,
-            )
+            return self._explain_chunk(
+                [(l_tuple, r_tuple)], matcher, num_triangles, attr_length,
+                lprefix, rprefix, max_predict,
+                use_w=left, use_q=right, debug=debug,
+            )[0]
 
     def explain_batch(
         self,
@@ -166,42 +135,39 @@ class CertaExplainer:
         lprefix: str = LPREFIX,
         rprefix: str = RPREFIX,
         max_predict: int = -1,
-        scan_batch_size: int = 8,
     ) -> list[Explanation]:
         """Set-oriented multi-pair explain — the shape the reference's
         per-instance Python loop cannot express: ONE model round scores
-        every instance's original pair, ONE fused corpus scan + model
-        round (operators/support.support_predictions_batch) covers every
+        every instance's original pair (one local relation), ONE fused
+        corpus scan + model round (operators/support.py) covers every
         instance's candidate search, and ONE member lookup and model
         round (per depth for a costly matcher) cover every instance's
-        perturbations.
+        perturbations. An instance whose support falls short (DA
+        fallback) scans only its own token-drop copies, then joins the
+        shared rounds.
 
-        ``explain_batch([x]) == [explain(x)]`` by construction (same
-        seeds, same per-instance stop rules) — parity-tested. Instances
-        whose support falls short (DA fallback) rescan through the
-        single-instance support path and then join the shared rounds.
+        ``explain(x)`` runs this pipeline on one instance, so
+        ``explain_batch([x]) == [explain(x)]`` (parity-tested).
 
-        ``scan_batch_size`` chunks very large batches: each chunk is
+        Batches above ``SCAN_BATCH_SIZE`` are split into chunks, each
         one fused scan. Catalyst analysis of the k-way union grows
         superlinearly with k (measured: batch-16 in one plan is slower
-        than two batch-8 plans), so the default keeps each plan in the
-        regime where the fused scan wins.
+        than two batch-8 plans), so each plan stays in the regime where
+        the fused scan wins.
         """
-        if matcher is None:
-            matcher = NativeCosineMatcher(lprefix, rprefix)
-        if len(instances) > scan_batch_size:
+        if len(instances) > SCAN_BATCH_SIZE:
             # overlap chunk pipelines: chunk n+1's scan runs while chunk
             # n's driver-side pass and model round drain
             chunks = [
-                instances[at : at + scan_batch_size]
-                for at in range(0, len(instances), scan_batch_size)
+                instances[at : at + SCAN_BATCH_SIZE]
+                for at in range(0, len(instances), SCAN_BATCH_SIZE)
             ]
             with ThreadPoolExecutor(max_workers=2) as cpool:
                 parts = list(
                     cpool.map(
                         lambda ch: self.explain_batch(
                             ch, matcher, num_triangles, attr_length,
-                            lprefix, rprefix, max_predict, scan_batch_size,
+                            lprefix, rprefix, max_predict,
                         ),
                         chunks,
                     )
@@ -215,45 +181,35 @@ class CertaExplainer:
 
     def _explain_chunk(
         self, instances, matcher, num_triangles, attr_length,
-        lprefix, rprefix, max_predict,
+        lprefix, rprefix, max_predict, use_w=True, use_q=True, debug=False,
     ) -> list[Explanation]:
         spark = self.spark
+        if matcher is None:
+            matcher = NativeCosineMatcher(lprefix, rprefix)
         # 1. original predictions, one model round for all instances
-        heads = None
-        for i, (l_t, r_t) in enumerate(instances):
-            h = pair_row(spark, l_t, r_t, lprefix, rprefix).withColumn(
-                "_i", F.lit(i)
-            )
-            heads = h if heads is None else heads.unionByName(h)
+        # (explain.py:54-55)
+        heads = pair_rows(spark, instances, lprefix, rprefix, index="_i")
+        match_scores = [0.0] * len(instances)
         pcs = [0] * len(instances)
         for r in (
             matcher.predict(heads)
             .select("_i", "nomatch_score", "match_score")
             .collect()
         ):
+            match_scores[r["_i"]] = float(r["match_score"])
             pcs[r["_i"]] = 1 if r["match_score"] > r["nomatch_score"] else 0
 
-        # 2. fused support scan for all instances
-        edges, n_support = support_predictions_batch(
+        # 2. support search for all instances (explain.py:56-62)
+        edges, extensions = support_predictions(
             spark, instances, self.lsource, self.rsource, matcher, pcs,
-            num_triangles, lprefix, rprefix, max_predict, self.seed,
-            self.use_all,
+            num_triangles, self.seed, lprefix=lprefix, rprefix=rprefix,
+            use_w=use_w, use_q=use_q, max_predict=max_predict,
+            use_all=self.use_all,
         )
-        extensions: list = [None] * len(instances)
-        for i, (l_t, r_t) in enumerate(instances):
-            if n_support[i] < num_triangles:
-                # the DA fallback's augmentation rescan belongs to the
-                # single-instance support path
-                edges[i], copies_left, copies_right = support_predictions(
-                    spark, l_t, r_t, self.lsource, self.rsource, matcher,
-                    class_to_explain=pcs[i], num_triangles=num_triangles,
-                    lprefix=lprefix, rprefix=rprefix, max_predict=max_predict,
-                    use_all=self.use_all, seed=self.seed,
-                )
-                if copies_left is not None:
-                    extensions[i] = (copies_right, copies_left)
 
-        # 3. perturb+predict for every instance with triangles at once
+        # 3. perturb+predict for every instance with triangles at once;
+        # DA copies of r2 extend the left source and copies of r1 the
+        # right one (explain.py:67)
         if attr_length <= 0:
             attr_length = min(len(instances[0][0]) - 1, len(instances[0][1]) - 1)
         triangles = [T.wedges(e) for e in edges]
@@ -272,7 +228,8 @@ class CertaExplainer:
         )
         return [
             self._explanation(
-                triangles[i], results[i], attr_length, lprefix, rprefix
+                triangles[i], results[i], attr_length, lprefix, rprefix,
+                match_scores[i] if debug else None,
             )
             if i in results
             else _empty()

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 import weakref
-from typing import Callable, Hashable
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,16 +63,19 @@ def local_frame(
 
 
 _DERIVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+T = TypeVar("T")
 
 
 def derived(
-    source: DataFrame, key: Hashable, build: Callable[[DataFrame], DataFrame]
-) -> DataFrame:
-    """``build(source)``, built once per (source, key) and dropped with
-    ``source``. A projection over fixed column names costs about a dozen
-    py4j round trips per Column to build, so per-call paths reuse it and
-    add only their per-call literals. ``build`` must be pure: two
-    threads may both build on a first call, and either result serves."""
+    source: DataFrame, key: Hashable, build: Callable[[DataFrame], T]
+) -> T:
+    """``build(source)``, computed once per (source, key) and dropped
+    with ``source``: a projection of the source (a frame) or a fact
+    about it (its row count). A projection over fixed column names costs
+    about a dozen py4j round trips per Column to build, so per-call
+    paths reuse it and add only their per-call literals. ``build`` must
+    be pure: two threads may both build on a first call, and either
+    result serves."""
     by_key = _DERIVED.setdefault(source, {})
     if key not in by_key:
         by_key[key] = build(source)

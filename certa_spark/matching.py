@@ -21,10 +21,12 @@ Two implementations:
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Protocol
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -44,6 +46,13 @@ class Matcher(Protocol):
     cheap: bool
 
 
+@functools.lru_cache(maxsize=8)
+def _nomatch_score(gateway) -> Column:
+    """``1 - match_score``, built once per JVM gateway: every Column op
+    costs py4j round trips."""
+    return 1.0 - F.col("match_score")
+
+
 class NativeCosineMatcher:
     """Deterministic matcher: match_score = BoW cosine of the two sides'
     concatenated attribute text (FIXTURES.md §2; same formula as
@@ -61,7 +70,7 @@ class NativeCosineMatcher:
             side_attributes(pairs.columns, self.rprefix),
         )
         return pairs.withColumn("match_score", score).withColumn(
-            "nomatch_score", 1.0 - F.col("match_score")
+            "nomatch_score", _nomatch_score(SparkContext._gateway)
         )
 
     # pandas twin used by tests/oracles — must agree with predict() to 1e-9

@@ -227,25 +227,6 @@ def duck_minhash_signature(expr: str, k: int = N_MINHASH, n: int = 3) -> str:
     return f"[{mins}]"
 
 
-def lsh_band_keys(sig: Column, bands: int = LSH_BANDS, k: int = N_MINHASH) -> Column:
-    """Array of (band, band_hash) structs: hash of each signature band."""
-    rows = k // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                hash32(
-                    F.concat_ws(
-                        "_",
-                        *[F.element_at(sig, b * rows + i + 1).cast("string") for i in range(rows)],
-                    )
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -845,10 +826,3 @@ def containment(a: Column, b: Column) -> Column:
         inter / F.size(a).cast("double")
     )
 
-
-def duck_containment(a: str, b: str) -> str:
-    return (
-        f"(CASE WHEN len({a}) = 0 THEN 0.0 ELSE "
-        f"CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
-        f" / CAST(len({a}) AS DOUBLE) END)"
-    )

@@ -18,6 +18,8 @@ synthesized/parsed only at the API boundary (F1/F2).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -26,6 +28,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     _infer_schema,
+    _merge_type,
 )
 
 from certa_spark.io import local_frame
@@ -53,6 +56,40 @@ def parse_member(member: Column) -> tuple[Column, Column]:
     return parts.getItem(0).cast("int"), parts.getItem(1).cast("long")
 
 
+def pair_rows(
+    spark,
+    pairs: list[tuple[dict, dict]],
+    lprefix: str = LPREFIX,
+    rprefix: str = RPREFIX,
+    index: str | None = None,
+) -> DataFrame:
+    """``get_row`` for many pairs (certa/utils.py:4-10): one wide row
+    per ``(left, right)`` record pair given as dicts, plus, with
+    ``index``, a column of that name holding the pair's position. Each
+    row's types are inferred from its values and merged into one
+    schema, sorted by name; a column ``None`` in every row is typed
+    string. The frame is one local relation
+    (:func:`certa_spark.io.local_frame`)."""
+    rows = [
+        {**{lprefix + k: v for k, v in l_record.items()},
+         **{rprefix + k: v for k, v in r_record.items()},
+         **({} if index is None else {index: i})}
+        for i, (l_record, r_record) in enumerate(pairs)
+    ]
+    merged = functools.reduce(_merge_type, map(_infer_schema, rows))
+    schema = StructType(
+        [
+            StructField(f.name, StringType())
+            if isinstance(f.dataType, NullType)
+            else f
+            for f in sorted(merged.fields, key=lambda f: f.name)
+        ]
+    )
+    return local_frame(
+        spark, [tuple(row.get(f.name) for f in schema) for row in rows], schema
+    )
+
+
 def pair_row(
     spark,
     l_record: dict,
@@ -60,22 +97,8 @@ def pair_row(
     lprefix: str = LPREFIX,
     rprefix: str = RPREFIX,
 ) -> DataFrame:
-    """``get_row`` equivalent: build the 1-row wide pair DataFrame from
-    two records given as dicts (certa/utils.py:4-10). Columns are
-    sorted by name and typed from the values; a missing (``None``)
-    value types its column as string. The frame is a local relation
-    (:func:`certa_spark.io.local_frame`)."""
-    row = {**{lprefix + k: v for k, v in l_record.items()},
-           **{rprefix + k: v for k, v in r_record.items()}}
-    schema = StructType(
-        [
-            StructField(f.name, StringType())
-            if isinstance(f.dataType, NullType)
-            else f
-            for f in _infer_schema(row)
-        ]
-    )
-    return local_frame(spark, [tuple(row[f.name] for f in schema)], schema)
+    """The one-pair case of :func:`pair_rows`: a 1-row wide pair frame."""
+    return pair_rows(spark, [(l_record, r_record)], lprefix, rprefix)
 
 
 def merge_sources(

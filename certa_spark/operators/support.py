@@ -12,8 +12,10 @@ batch and stopping once ``num_candidates`` qualifying rows are found
 (T3 early exit). Then balance the two sides, permute, and cap the
 result at ``num_triangles`` (local_explain.py:63-64,162-197).
 
-Spark runs the part that grows with the sources, as ONE pass ending
-in ONE collect:
+Every explain runs one list-shaped assembly, :func:`support_predictions`
+(``explain(x)`` is its one-instance case). Spark runs the part that
+grows with the sources, as ONE pass over every instance's probes
+ending in ONE collect:
   1. probe columns are literals over a source projection built once
      per source -> no join at all for J2;
   2. ranking cap: only the first ``batch*20`` rows per side in score
@@ -24,12 +26,14 @@ in ONE collect:
   4. the collect brings back each ranked row's side, rank, ids,
      qualifying flag and label — at most ``batch*20`` rows per side.
 
-The driver finishes over those rows with plain functions shared by the
-single-instance and batch paths: the stop rule (:func:`stop_rule`),
-balancing (:func:`balance`), and the permutation, head/tail cap and
-head edge (:func:`support_edges`). The seeded hash orders use
-:func:`md5_hash32`, the driver twin of Spark's ``hash32``. Both paths
-return ``(id, label)`` edge lists for ``triangles.wedges``.
+The driver finishes over those rows with plain functions: the stop
+rule (:func:`stop_rule`), balancing (:func:`balance`), and the
+permutation, head/tail cap and head edge (:func:`support_edges`). The
+seeded hash orders use :func:`md5_hash32`, the driver twin of Spark's
+``hash32``. An instance whose support falls short (the DA fallback)
+then scans only its own token-drop copies, through the same scan and
+balancing, never the main sources again. The result is one
+``(id, label)`` edge list per instance for ``triangles.wedges``.
 
 At 100TB the cosine ranking itself is the bottleneck; the scale path is
 MinHash-LSH candidate pruning (certa_spark.operators.similarity) feeding
@@ -40,13 +44,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from certa_spark import tmpcache
 from pyspark.sql.window import Window
 
+from certa_spark import tmpcache
 from certa_spark.functions.hashing import hash32, md5_hash32
 from certa_spark.functions.text import bow_cosine_of, side_text
 from certa_spark.io import derived
 from certa_spark.matching import Matcher
+from certa_spark.operators.augment import expand_copies
 from certa_spark.schema import LPREFIX, RPREFIX, side_attributes
 
 MAX_BATCHES = 20  # certa/local_explain.py:113
@@ -125,7 +130,7 @@ def stop_rule(
 def scan_candidates_dual(
     parts: list[tuple[DataFrame, str, str, int, str]],
     matcher: Matcher,
-    find_positives: bool | dict[str, bool],
+    find_positives: dict[str, bool],
     num_candidates: int,
     max_predict: int = -1,
     batched: bool = True,
@@ -139,20 +144,13 @@ def scan_candidates_dual(
     ranking (window per side) and the single model round run as one job
     chain; the collect returns each side's capped ranked rows, and
     :func:`stop_rule` replays the per-side batch scan on the driver.
+    ``find_positives`` gives each tag's polarity, so one scan serves
+    instances whose predicted classes differ: ordering rides a
+    sign-folded score column and the qualifying test is tag-conditional.
     With ``batched=False`` (data augmentation 'always') every row is
     scored and every qualifying row kept.
     Returns {side_tag: qualifying candidates}.
     """
-    # per-tag polarity: a plain bool applies to every part (the
-    # single-instance path); a {tag: bool} dict lets one fused scan
-    # serve a BATCH of instances whose predicted classes differ
-    # (explain_batch) — ordering rides a sign-folded score column and
-    # the qualifying test becomes tag-conditional.
-    if isinstance(find_positives, dict):
-        fp = dict(find_positives)
-    else:
-        fp = {tag: find_positives for *_, tag in parts}
-
     batch = num_candidates * 4
     frames = []
     for pairs, pfx, ptext, seed, tag in parts:
@@ -177,7 +175,8 @@ def scan_candidates_dual(
             # direction (desc for find-positives); ties fall to the id
             # tiebreak either way, so ranks match the per-direction sort
             .withColumn(
-                "_sord", F.col("_score") * F.lit(-1.0 if fp[tag] else 1.0)
+                "_sord",
+                F.col("_score") * F.lit(-1.0 if find_positives[tag] else 1.0),
             )
         )
     allc = frames[0]
@@ -189,8 +188,8 @@ def scan_candidates_dual(
     order = ["_sord"] + [
         c for c in parts[0][0].columns if c.endswith("_id") or c.endswith("id")
     ]
-    pos_tags = [t for t, v in fp.items() if v]
-    if len(pos_tags) == len(fp):
+    pos_tags = [t for t, v in find_positives.items() if v]
+    if len(pos_tags) == len(find_positives):
         qual = F.col("match_score") > 0.5
     elif not pos_tags:
         qual = F.col("match_score") < 0.5
@@ -270,14 +269,12 @@ def support_edges(
     return [head, *((cid, label) for _, cid, label in keyed)]
 
 
-def get_support(
-    spark: SparkSession,
-    r1: dict,
-    r2: dict,
+def _scan(
+    instances: list[tuple[dict, dict]],
     lsource: DataFrame,
     rsource: DataFrame,
     matcher: Matcher,
-    find_positives: bool,
+    find_positives: list[bool],
     num_triangles: int,
     lprefix: str = LPREFIX,
     rprefix: str = RPREFIX,
@@ -286,79 +283,70 @@ def get_support(
     max_predict: int = -1,
     use_all: bool = False,
     seed: int = 42,
-) -> tuple[list[Candidate], int]:
-    """certa/local_explain.py:162-197 — gather qualifying candidates on
-    both sides and balance them. Returns (support candidates, count)."""
-    num_candidates = int(num_triangles / 2)
-
-    parts = []
-    if use_q:
-        c1 = candidate_pairs(r1, rsource, "left", lprefix, rprefix)
-        parts.append((c1, rprefix, probe_text(r1), seed, "q"))
-    if use_w:
-        c2 = candidate_pairs(r2, lsource, "right", lprefix, rprefix)
-        parts.append((c2, lprefix, probe_text(r2), seed + 1, "w"))
-    if not parts:
+) -> list[list[Candidate]]:
+    """certa/local_explain.py:162-197 for every instance at once: each
+    contributes its probe parts, tagged ``"{i}:q"``/``"{i}:w"``, to ONE
+    :func:`scan_candidates_dual` pass over ``(lsource, rsource)``, and
+    each instance's sides are then balanced. ``use_q``/``use_w`` scan
+    for r1's / r2's support; ``use_all`` (data augmentation 'always')
+    scores every candidate instead of stopping early. Returns the
+    balanced support candidates per instance."""
+    if not (use_w or use_q):
         raise ValueError("at least one of use_w/use_q must be set")
-
+    parts = []
+    fp_by_tag: dict[str, bool] = {}
+    for i, (r1, r2) in enumerate(instances):
+        if use_q:
+            c1 = candidate_pairs(r1, rsource, "left", lprefix, rprefix)
+            parts.append((c1, rprefix, probe_text(r1), seed, f"{i}:q"))
+            fp_by_tag[f"{i}:q"] = find_positives[i]
+        if use_w:
+            c2 = candidate_pairs(r2, lsource, "right", lprefix, rprefix)
+            parts.append((c2, lprefix, probe_text(r2), seed + 1, f"{i}:w"))
+            fp_by_tag[f"{i}:w"] = find_positives[i]
     sides = scan_candidates_dual(
-        parts, matcher, find_positives, num_candidates, max_predict,
+        parts, matcher, fp_by_tag, int(num_triangles / 2), max_predict,
         not use_all, lprefix, rprefix,
     )
-    support = balance([sides[tag] for *_, tag in parts], seed)
+    return [
+        balance([sides[t] for t in (f"{i}:q", f"{i}:w") if t in sides], seed)
+        for i in range(len(instances))
+    ]
+
+
+def get_support(
+    r1: dict, r2: dict, lsource: DataFrame, rsource: DataFrame,
+    matcher: Matcher, find_positives: bool, num_triangles: int, **scan,
+) -> tuple[list[Candidate], int]:
+    """One instance's support scan over the given sources — the DA
+    fallback's token-drop copies; ``scan`` takes :func:`_scan`'s
+    settings. Returns (support candidates, count)."""
+    [support] = _scan(
+        [(r1, r2)], lsource, rsource, matcher, [find_positives],
+        num_triangles, **scan,
+    )
     return support, len(support)
 
 
-def support_predictions(
-    spark: SparkSession,
-    r1: dict,
-    r2: dict,
-    lsource: DataFrame,
-    rsource: DataFrame,
-    matcher: Matcher,
-    class_to_explain: int,
-    num_triangles: int = 100,
-    lprefix: str = LPREFIX,
-    rprefix: str = RPREFIX,
-    use_w: bool = True,
-    use_q: bool = True,
-    max_predict: int = -1,
-    use_all: bool = False,
-    seed: int = 42,
-) -> tuple[list[Edge], DataFrame | None, DataFrame | None]:
-    """certa/local_explain.py:17-79 — the full support-set assembly.
-
-    Returns (support edges, copies_left, copies_right); the first edge
-    is the explained pair itself, labelled ``class_to_explain``.
-    """
-    from certa_spark.operators.augment import expand_copies
-
-    find_positives = class_to_explain == 0
-    support, n_support = get_support(
-        spark, r1, r2, lsource, rsource, matcher, find_positives,
-        num_triangles, lprefix, rprefix, use_w, use_q, max_predict, use_all, seed,
-    )
-
-    copies_left = copies_right = None
-    if n_support < num_triangles:
-        # DA fallback (local_explain.py:51-60): token-drop copies of the
-        # probes themselves, paired through the same scan.
-        n_l, n_r = lsource.count(), rsource.count()
-        copies_left, copies_right = expand_copies(spark, r1, r2, n_l, n_r)
-        copies_left = tmpcache.track(copies_left.cache())
-        copies_right = tmpcache.track(copies_right.cache())
-        support2, _ = get_support(
-            spark, r1, r2, copies_right, copies_left, matcher, find_positives,
-            num_triangles, lprefix, rprefix, use_w, use_q, max_predict, use_all,
-            seed + 7,
-        )
-        support += support2
-
-    edges = support_edges(r1, r2, class_to_explain, support, num_triangles, seed)
-    return edges, copies_left, copies_right
-
-
 def support_predictions_batch(
+    instances: list[tuple[dict, dict]], lsource: DataFrame,
+    rsource: DataFrame, matcher: Matcher, classes_to_explain: list[int],
+    num_triangles: int, **scan,
+) -> tuple[list[list[Candidate]], list[int]]:
+    """The main support scan of a BATCH of explained pairs — ONE corpus
+    scan, ONE TopK window pass, ONE model round and ONE collect cover
+    every instance's candidate search, instead of k sequential scans
+    (the per-tag ``find_positives`` handles instances whose predicted
+    classes differ); ``scan`` takes :func:`_scan`'s settings. Returns
+    the balanced support candidates and their count per instance."""
+    supports = _scan(
+        instances, lsource, rsource, matcher,
+        [c == 0 for c in classes_to_explain], num_triangles, **scan,
+    )
+    return supports, [len(s) for s in supports]
+
+
+def support_predictions(
     spark: SparkSession,
     instances: list[tuple[dict, dict]],
     lsource: DataFrame,
@@ -366,55 +354,49 @@ def support_predictions_batch(
     matcher: Matcher,
     classes_to_explain: list[int],
     num_triangles: int = 100,
-    lprefix: str = LPREFIX,
-    rprefix: str = RPREFIX,
-    max_predict: int = -1,
     seed: int = 42,
-    use_all: bool = False,
-) -> tuple[list[list[Edge]], list[int]]:
-    """Set-oriented support assembly for a BATCH of explained pairs —
-    the capability the reference's per-instance loop cannot express:
-    ONE corpus scan, ONE TopK window pass, ONE model round and ONE
-    collect cover every instance's candidate search, instead of k
-    sequential scans.
+    **scan,
+) -> tuple[list[list[Edge]], list[tuple[DataFrame, DataFrame] | None]]:
+    """certa/local_explain.py:17-79 — the full support-set assembly of
+    every instance: one scan of the main sources for all of them
+    (:func:`support_predictions_batch`); an instance whose support
+    falls short of ``num_triangles`` then scans its own token-drop
+    copies (the DA fallback, local_explain.py:51-60, :func:`get_support`).
+    ``scan`` takes :func:`_scan`'s other settings.
 
-    Each instance contributes its two probe parts tagged
-    ``"{i}:q"``/``"{i}:w"`` to a single :func:`scan_candidates_dual`
-    call (the per-tag ``find_positives`` dict handles instances whose
-    predicted classes differ); the driver finish then runs per
-    instance with the seeds the single-instance path uses, so
-    ``explain_batch([x]) == explain(x)`` (parity-tested).
-
-    Returns ``(edges_per_instance, n_support_per_instance)``. Instances
-    whose support falls short of ``num_triangles`` (the DA-fallback
-    path) are returned unextended — callers detect them via the counts
-    and run the single-instance :func:`support_predictions` for those.
+    Returns (edges, extensions), one entry per instance: the support
+    edges, the first being the explained pair labelled with its class,
+    and the (left, right) copies extending the sources when the
+    fallback ran.
     """
-    num_candidates = int(num_triangles / 2)
-
-    parts = []
-    fp_by_tag: dict[str, bool] = {}
-    for i, (r1, r2) in enumerate(instances):
-        find_positives = classes_to_explain[i] == 0
-        c1 = candidate_pairs(r1, rsource, "left", lprefix, rprefix)
-        parts.append((c1, rprefix, probe_text(r1), seed, f"{i}:q"))
-        fp_by_tag[f"{i}:q"] = find_positives
-        c2 = candidate_pairs(r2, lsource, "right", lprefix, rprefix)
-        parts.append((c2, lprefix, probe_text(r2), seed + 1, f"{i}:w"))
-        fp_by_tag[f"{i}:w"] = find_positives
-
-    sides = scan_candidates_dual(
-        parts, matcher, fp_by_tag, num_candidates, max_predict,
-        not use_all, lprefix, rprefix,
+    supports, n_support = support_predictions_batch(
+        instances, lsource, rsource, matcher, classes_to_explain,
+        num_triangles, seed=seed, **scan,
     )
     edges: list[list[Edge]] = []
-    n_support: list[int] = []
-    for i, (r1, r2) in enumerate(instances):
-        support = balance([sides[f"{i}:q"], sides[f"{i}:w"]], seed)
-        n_support.append(len(support))
-        edges.append(
-            support_edges(
-                r1, r2, classes_to_explain[i], support, num_triangles, seed
+    extensions: list[tuple[DataFrame, DataFrame] | None] = []
+    for (r1, r2), pc, support, n in zip(
+        instances, classes_to_explain, supports, n_support
+    ):
+        extension = None
+        if n < num_triangles:
+            copies_left, copies_right = expand_copies(
+                spark, r1, r2, _count(lsource), _count(rsource)
             )
-        )
-    return edges, n_support
+            copies_left = tmpcache.track(copies_left.cache())
+            copies_right = tmpcache.track(copies_right.cache())
+            more, _ = get_support(
+                r1, r2, copies_right, copies_left, matcher, pc == 0,
+                num_triangles, seed=seed + 7, **scan,
+            )
+            support = support + more
+            extension = (copies_right, copies_left)
+        edges.append(support_edges(r1, r2, pc, support, num_triangles, seed))
+        extensions.append(extension)
+    return edges, extensions
+
+
+def _count(source: DataFrame) -> int:
+    """Row count of a long-lived source, counted once per source: the
+    DA fallback numbers its copies after it."""
+    return derived(source, "count", lambda s: s.count())

@@ -4129,17 +4129,6 @@ _Q_TPCH_Q22_SQL = f"""
 """
 
 
-def _supply(spark, sf_dir) -> DataFrame:
-    """The testdata has no partsupp table; the observed distinct
-    (l_partkey, l_suppkey) pairs in lineitem serve as the supply
-    relation for the partsupp-centric queries (q2, q11, q20)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-
-
 _SUPPLY_SQL = "SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"
 
 

@@ -34,10 +34,6 @@ def strip_prefix(name: str, prefix: str) -> str:
     return name[len(prefix):] if name.startswith(prefix) else name
 
 
-def strip_prefix_columns(df: DataFrame, prefix: str) -> DataFrame:
-    return df.select(*[F.col(c).alias(strip_prefix(c, prefix)) for c in df.columns])
-
-
 def side_attributes(columns: list[str], prefix: str) -> list[str]:
     """P6 — attribute columns of one side, its id excluded
     (certa/local_explain.py:108)."""

@@ -171,22 +171,129 @@ def test_explain_data_augmentation_always(spark, er_tables):
     assert res.saliency is not None
 
 
-def test_explain_on_demand_fallback_expands_copies(spark, er_tables):
-    """num_triangles far above what the sources can support forces the
-    expand_copies DA fallback (support < budget) on the scan path."""
-    from certa_spark.explainer import CertaExplainer
-    from certa_spark.matching import NativeCosineMatcher
-    from tests.fixtures import COLS
+def _reaches_copy(triangle, n_rows: int) -> bool:
+    """Whether a triangle has a vertex past the ``n_rows`` source rows:
+    a DA token-drop copy."""
+    return any(int(v.split("@")[1]) >= n_rows for v in triangle)
 
+
+def test_explain_on_demand_fallback_expands_copies(spark, er_tables):
+    """An instance whose main-source support falls short of
+    num_triangles runs the DA fallback: the token-drop copies of its
+    own records are scanned, and their support pairs join the main
+    ones. Here 5 of the 6 triangles reach a copy (an id past the 60
+    source rows) and one stays within the sources."""
     rows_a, rows_b, A, B = er_tables
     ex = CertaExplainer(spark, A, B, data_augmentation="no")
     res = ex.explain(
         dict(zip(COLS, rows_a[0])),
-        dict(zip(COLS, rows_b[0])),
+        dict(zip(COLS, rows_b[40])),
         NativeCosineMatcher(),
-        num_triangles=2,
+        num_triangles=6,
     )
-    assert isinstance(res.triangles, list)
+    assert len(res.triangles) == 6
+    assert sum(_reaches_copy(t, len(rows_b)) for t in res.triangles) == 5
+
+
+def _jobs_of(spark, group: str, fn):
+    """(Spark jobs ``fn()`` launched on this thread, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_fallback_explain_job_budget(spark, er_tables):
+    """A warm explain whose support falls short (num_triangles=40 over
+    60-row sources, so the main scan qualifies nothing) launches at most
+    10 Spark jobs, through ``explain`` and ``explain_batch([x])`` alike:
+    the main scan (2), the variant stride of each side's copies (4) and
+    the scan of the cached copies (4). Each source is counted once per
+    explainer and the main sources are never scanned twice. Before
+    that, the fallback rescanned the main sources and counted both on
+    every call: 14 jobs for ``explain`` and 16 for ``explain_batch``."""
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    m = NativeCosineMatcher()
+    l, r = dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[0]))
+    ex.explain(l, r, m, num_triangles=40)
+    n_one, one = _jobs_of(
+        spark, "fallback-explain", lambda: ex.explain(l, r, m, num_triangles=40)
+    )
+    n_batch, [batch] = _jobs_of(
+        spark, "fallback-batch",
+        lambda: ex.explain_batch([(l, r)], m, num_triangles=40),
+    )
+    assert n_one <= 10, n_one
+    assert n_batch <= 10, n_batch
+    assert _summary(batch) == _summary(one)
+
+
+def test_explain_batch_mixes_fallback_and_plain(spark, er_tables):
+    """A batch where one instance runs the DA fallback and one does not
+    gives each instance its explanation alone."""
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    m = NativeCosineMatcher()
+    insts = [
+        (dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[0]))),  # plain
+        (dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[40]))),  # fallback
+    ]
+    batch = ex.explain_batch(insts, m, num_triangles=6)
+    alone = [ex.explain(l, r, m, num_triangles=6) for l, r in insts]
+    assert [_summary(b) for b in batch] == [_summary(a) for a in alone]
+    assert [any(_reaches_copy(t, len(rows_b)) for t in a.triangles)
+            for a in alone] == [False, True]
+
+
+# explain(left=False) / explain(right=False) outputs, frozen from the
+# engine before explain became the one-instance batch: the triangles of
+# the one side scanned and the saliency, keyed by (left row, right row)
+# and the side left out
+ONE_SIDE = {
+    ((0, 0), "left"): (
+        [("1@0", "0@0", f"1@{i}") for i in (14, 19, 20, 21, 24, 31, 43, 45, 5, 58)],
+        {"ltable_name": 1 / 6, "ltable_description": 1 / 6,
+         "ltable_price": 1 / 6, "rtable_name": 2 / 3,
+         "rtable_description": 2 / 3, "rtable_price": 0.5},
+    ),
+    ((0, 0), "right"): (
+        [("0@0", "1@0", f"0@{i}") for i in (1, 12, 2, 20, 25, 30, 32, 34, 41, 42)],
+        {"ltable_name": 2 / 3, "ltable_description": 2 / 3,
+         "ltable_price": 0.5, "rtable_name": 1 / 6,
+         "rtable_description": 1 / 6, "rtable_price": 1 / 6},
+    ),
+    ((2, 40), "left"): (
+        [("1@2", "0@2", "1@40")],
+        {"ltable_name": 0.5, "ltable_description": 0.5, "ltable_price": 0.5,
+         "rtable_name": 1.0, "rtable_description": 1.0, "rtable_price": 0.5},
+    ),
+    ((2, 40), "right"): (
+        [("0@24", "1@40", "0@2")],
+        {"ltable_name": 1.0, "ltable_description": 1.0, "ltable_price": 0.5,
+         "rtable_name": 0.5, "rtable_description": 0.5, "rtable_price": 0.5},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ONE_SIDE), ids=str)
+def test_explain_one_side_frozen(spark, er_tables, case):
+    """``left=False`` scans for support on the right side only (the q
+    probe) and ``right=False`` on the left side only (the w probe)."""
+    (i, j), off = case
+    rows_a, rows_b, A, B = er_tables
+    ex = CertaExplainer(spark, A, B, data_augmentation="no")
+    res = ex.explain(
+        dict(zip(COLS, rows_a[i])), dict(zip(COLS, rows_b[j])),
+        NativeCosineMatcher(), num_triangles=10, **{off: False},
+    )
+    triangles, saliency = ONE_SIDE[case]
+    assert sorted(res.triangles) == sorted(triangles)
+    assert res.saliency_dict == pytest.approx(saliency, abs=1e-12)
 
 
 def test_explain_batch_matches_per_instance(spark, er_tables):
@@ -220,7 +327,7 @@ def test_explain_batch_matches_per_instance(spark, er_tables):
 
 
 def test_explain_batch_chunked_parity(spark, er_tables):
-    """Batches above scan_batch_size split into overlapped chunk
+    """Batches above SCAN_BATCH_SIZE (8) split into overlapped chunk
     pipelines — outputs must be ordered and identical across the chunk
     boundary."""
     rows_a, rows_b, A, B = er_tables
@@ -230,11 +337,9 @@ def test_explain_batch_chunked_parity(spark, er_tables):
         (dict(zip(COLS, rows_a[i])), dict(zip(COLS, rows_b[i])))
         for i in range(9)
     ]
-    batch = ex.explain_batch(
-        insts, m, num_triangles=10, scan_batch_size=4
-    )
+    batch = ex.explain_batch(insts, m, num_triangles=10)
     assert len(batch) == 9
-    for i in (0, 5, 8):  # first chunk, middle chunk, last partial chunk
+    for i in (0, 5, 8):  # first chunk, first chunk, last partial chunk
         want = ex.explain(insts[i][0], insts[i][1], m, num_triangles=10)
         assert batch[i].saliency_dict == want.saliency_dict
         assert sorted(batch[i].triangles) == sorted(want.triangles)
@@ -318,29 +423,26 @@ def test_warm_explain_job_budget(spark, er_tables):
     m = NativeCosineMatcher()
     l, r = dict(zip(COLS, rows_a[0])), dict(zip(COLS, rows_b[0]))
     ex.explain(l, r, m, num_triangles=10)
-    sc = spark.sparkContext
-    sc.setJobGroup("test-explain-job-budget", "one warm explain")
-    try:
-        res = ex.explain(l, r, m, num_triangles=10)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("test-explain-job-budget")
+    n_jobs, res = _jobs_of(
+        spark, "test-explain-job-budget",
+        lambda: ex.explain(l, r, m, num_triangles=10),
+    )
     assert len(res.triangles) > 0
-    assert len(jobs) <= 3, len(jobs)
+    assert n_jobs <= 3, n_jobs
 
 
 def test_warm_explain_py4j_budget(spark, er_tables, monkeypatch):
-    """A warm explain makes at most 704 py4j round trips on its own
+    """A warm explain makes at most 627 py4j round trips on its own
     thread, the count measured when this budget was set (the count is
     deterministic). Every Column built on the driver costs about a
     dozen round trips, so the cosine expression (about 450 per build)
-    is built once per column layout, the source projections of the
-    candidate pairs and the member lookup once per source, the member
-    ids enter as one SQL predicate, and the support search's
-    bookkeeping after the scan runs in Python. Before
-    the cosine memo the same explain made 4,979; before the projection
-    memos and the driver-side support bookkeeping, 2,194. Releases of
+    and the matcher's ``nomatch_score`` are built once per column
+    layout, the source projections of the candidate pairs and the
+    member lookup once per source, the member ids enter as one SQL
+    predicate, and the support search's bookkeeping after the scan
+    runs in Python. Before the cosine memo the same explain made 4,979;
+    before the projection memos and the driver-side support
+    bookkeeping, 2,194; before the ``nomatch_score`` memo, 704. Releases of
     JVM objects are sent later by py4j's finalizer thread, at times of
     its own, so they are not counted."""
     import threading
@@ -364,7 +466,7 @@ def test_warm_explain_py4j_budget(spark, er_tables, monkeypatch):
         monkeypatch.setattr(cls, "send_command", counted)
     res = ex.explain(l, r, m, num_triangles=10)
     assert len(res.triangles) > 0
-    assert calls[0] <= 704, calls[0]
+    assert calls[0] <= 627, calls[0]
 
 
 def test_costly_matcher_rows_scored(spark, er_tables):
