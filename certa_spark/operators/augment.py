@@ -11,9 +11,11 @@ fully distributed, one narrow stage, no shuffle.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from certa_spark.io import local_frame
 
@@ -110,6 +112,29 @@ def generate_subsequences(
     return gen_left, gen_right
 
 
+# Java's ``\s`` (the ``split`` regex above) is only these six characters;
+# Python's ``\s`` and ``str.split()`` also split on other Unicode spaces
+_JAVA_SPACE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _modified_rows(record: dict, id_col: str, start_id: int) -> list[tuple]:
+    """:func:`generate_modified` of one record, built on the driver: the
+    same rows in the same order, ``(id, *attrs)`` with the attributes
+    sorted by name and cast to string."""
+    attrs = sorted(k for k in record if k != id_col)
+    vals = [str(record[a]) for a in attrs]
+    variants = []
+    for i, v in enumerate(vals):
+        toks = [t for t in _JAVA_SPACE.split(v) if t]
+        for cut in range(1, len(toks)):
+            variants += [(i, " ".join(toks[cut:])), (i, " ".join(toks[:cut]))]
+    base = start_id + int(record[id_col]) * len(variants)
+    return [
+        (base + pos, *(val if j == i else v for j, v in enumerate(vals)))
+        for pos, (i, val) in enumerate(variants)
+    ]
+
+
 def expand_copies(
     spark,
     l_record: dict,
@@ -123,18 +148,16 @@ def expand_copies(
     *opposite* source's id space. Returns (copies_left, copies_right):
     ``copies_left`` are right-table records derived from ``l_record``
     (ids continue after ``n_rsource``), ``copies_right`` are left-table
-    records derived from ``r_record`` (ids after ``n_lsource``).
+    records derived from ``r_record`` (ids after ``n_lsource``). Both
+    are :func:`generate_modified`'s rows, built on the driver and shipped
+    as local relations, so the fallback launches no job to size them.
     """
 
-    def one_row(record: dict) -> DataFrame:
-        names = sorted(record)
-        schema = StructType([StructField(k, StringType()) for k in names])
-        return local_frame(spark, [tuple(str(record[k]) for k in names)], schema)
+    def copies(record: dict, start_id: int) -> DataFrame:
+        schema = StructType(
+            [StructField(id_col, LongType())]
+            + [StructField(k, StringType()) for k in sorted(record) if k != id_col]
+        )
+        return local_frame(spark, _modified_rows(record, id_col, start_id), schema)
 
-    copies_left = generate_modified(
-        one_row(l_record), id_col=id_col, start_id=n_rsource
-    )
-    copies_right = generate_modified(
-        one_row(r_record), id_col=id_col, start_id=n_lsource
-    )
-    return copies_left, copies_right
+    return copies(l_record, n_rsource), copies(r_record, n_lsource)

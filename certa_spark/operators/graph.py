@@ -30,11 +30,12 @@ training-data-pipeline extension surface, built green-field.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from certa_spark.io import local_frame
+from certa_spark.operators.observe import checkpoint_observed
 
 
 def _default_partitions(df: DataFrame, partitions: int | None) -> int:
@@ -464,6 +465,156 @@ def cooccurrence_pairs(
     return out.distinct() if distinct_pairs else out
 
 
+# A rounded contribution is an exact multiple of 1e-12, so PageRank sums
+# contributions as long counts of that unit: exact in any aggregation
+# order, and far cheaper than a per-edge DECIMAL(38,18) sum.
+_UNITS = 1e12
+
+
+def _units(x: Column) -> Column:
+    """A non-negative double already rounded to 12 places, as its exact
+    count of 1e-12 units (``x * 1e12`` lies within 2^-12 of it)."""
+    return F.floor(x * F.lit(_UNITS) + F.lit(0.5))
+
+
+def symmetrized(pairs: DataFrame) -> DataFrame:
+    """Both directions ``(s, t)`` of every :func:`cooccurrence_pairs`
+    pair ``(pa, pb)``, in one pass over ``pairs`` (a union of two
+    projections runs the pair build twice)."""
+    both = F.array(
+        F.struct(F.col("pa").alias("s"), F.col("pb").alias("t")),
+        F.struct(F.col("pb").alias("s"), F.col("pa").alias("t")),
+    )
+    return pairs.select(F.explode(both).alias("e")).select("e.s", "e.t")
+
+
+def _pagerank(
+    ed: DataFrame,
+    damping: float,
+    iterations: int,
+    partitions: int | None,
+    symmetric: bool = False,
+    dangling: bool = False,
+    seeds: list[int] | None = None,
+    degree: str | None = None,
+) -> DataFrame:
+    """The loop of every PageRank variant, over ``ed = (s, t)`` plus an
+    optional weight ``_w`` or the out-degree ``_deg`` a caller's column
+    ``degree`` holds:
+
+        r'(v) = round(teleport(v) + d * (sum_in c + lost/N), 12)
+        c = round(r(u) * w / sum_out w, 12)   (w = 1 without weights)
+
+    * The edges are checkpointed once. One ``groupBy(s)`` gives the
+      out-degrees (weight sums); on a symmetric graph that is also the
+      node list, otherwise it is full-joined once with the targets to
+      flag nodes without in-edges and sinks. The node counts ride that
+      checkpoint's job (``checkpoint_observed``).
+    * With uniform weights a contribution depends only on its source,
+      so it is computed on the node side; each edge is left with a join
+      and a long sum. Below ~4M nodes the node side is broadcast and the
+      |E|-row edges never re-shuffle. The new ranks take their
+      out-degrees back from the node table. On a symmetric graph the
+      first of those joins is an outer one: a target missing from the
+      table is a sink the node count left out, and raises.
+    * Contributions are summed as exact :data:`_UNITS` and converted
+      once per node: bit-identical to the SQL oracle's
+      ``CAST(SUM(CAST(c AS DECIMAL(38,18))) AS DOUBLE)``. The long sum
+      is exact below 2^53 units (an inflow is at most the total mass,
+      ~1e12 units), and ``Decimal.toDouble`` and the IEEE division both
+      round correctly.
+    * ``dangling``: ``lost`` is the (DECIMAL-summed, node-side) rank on
+      sinks, spread uniformly. The ranks are then read twice per
+      iteration, so each is checkpointed; otherwise every second one is,
+      to bound plan growth. ``seeds``: teleport and initial mass sit on
+      the seed set.
+    """
+    partitions = _default_partitions(ed, partitions)
+    weighted = "_w" in ed.columns
+    counts = {"n": F.count(F.lit(1))}
+    if degree is None:
+        ed = ed.repartition(partitions, "s").localCheckpoint()
+        out = [F.sum("_w") if weighted else F.count(F.lit(1)).cast("double")]
+    else:
+        # the caller's degree column is checked on the node table's own
+        # job: each source names one positive integer, its edge count
+        out = [F.max("_deg"), F.min("_deg").alias("_lo"),
+               F.count("_deg").alias("_nd"), F.count(F.lit(1)).alias("_k")]
+        hi, lo, k = F.col("_out"), F.col("_lo"), F.col("_k")
+        counts["bad"] = F.min(F.when(
+            (F.col("_nd") < k) | (lo < 1) | (hi != F.floor(hi)), F.col("node")))
+        counts["stale"] = F.min(F.when((lo != hi) | (hi != k), F.col("node")))
+    nodes = ed.groupBy(F.col("s").alias("node")).agg(out[0].alias("_out"), *out[1:])
+    ed = ed.drop("_deg")
+    if not symmetric:
+        heads = ed.select(F.col("t").alias("node"), F.lit(True).alias("_in"))
+        nodes = nodes.join(heads.distinct(), "node", "full")
+        counts["no_in"] = F.count(F.when(F.col("_in").isNull(), 1))
+    nodes, seen = checkpoint_observed(nodes, **counts)
+    if seen.get("bad") is not None:
+        raise ValueError(
+            f"pagerank_personalized: degree column {degree!r} violates its "
+            "contract (must be a positive integer per edge row): source "
+            f"{seen['bad']!r}")
+    if seen.get("stale") is not None:
+        raise ValueError(
+            f"pagerank_personalized: degree column {degree!r} is inconsistent "
+            f"with the edge set at source {seen['stale']!r} (was it computed "
+            "before a filter, or per distinct target?)")
+    hint = F.broadcast if seen["n"] <= 4_000_000 else (lambda df: df)
+    inv_n = 1.0 / float(seen["n"])
+    if seeds is None:
+        teleport, r0 = F.lit((1.0 - damping) * inv_n), F.lit(inv_n)
+    else:
+        inv_s = 1.0 / float(len(seeds))
+        seed = F.col("node").isin(seeds)
+        teleport = F.when(seed, F.lit((1.0 - damping) * inv_s)).otherwise(0.0)
+        r0 = F.when(seed, F.lit(inv_s)).otherwise(0.0)
+    back = hint(nodes.select("node", "_out"))
+    ranks = nodes.select("node", r0.alias("r"), "_out")
+    for i in range(iterations):
+        src = ranks.withColumnRenamed("node", "s")
+        if weighted:
+            flows = ed.join(hint(src), "s")
+            u = _units(F.round(F.col("r") * F.col("_w") / F.col("_out"), 12))
+        else:
+            u = _units(F.round(F.col("r") / F.col("_out"), 12))
+            flows, u = ed.join(hint(src.select("s", u.alias("_u"))), "s"), F.col("_u")
+        inflow = flows.groupBy(F.col("t").alias("node")).agg(
+            (F.sum(u).cast("double") / F.lit(_UNITS)).alias("_in"))
+        if seen.get("no_in"):
+            inflow = inflow.unionByName(nodes.filter(F.col("_in").isNull())
+                                        .select("node", F.lit(0.0).alias("_in")))
+        if dangling:
+            lost = ranks.filter(F.col("_out").isNull()).agg(F.coalesce(
+                F.sum(F.col("r").cast("decimal(38,18)")).cast("double"),
+                F.lit(0.0),
+            ).alias("_lost"))
+            spread = F.col("_lost") * F.lit(inv_n)
+            inflow = inflow.crossJoin(F.broadcast(lost)).select(
+                "node", (F.col("_in") + spread).alias("_in"))
+        r = F.round(teleport + F.lit(damping) * F.col("_in"), 12)
+        ranks = inflow.select("node", r.alias("r"))
+        if symmetric and i == 0:
+            # every target has in-flow now: one missing from the node
+            # table is a sink that N left out. Both columns carry the
+            # check, since a division skips its dividend when the
+            # divisor is null.
+            sink = F.when(F.col("_out").isNull(), F.raise_error(F.concat(
+                F.lit("pagerank: symmetric=True, but node "),
+                F.col("node").cast("string"),
+                F.lit(" has in-edges and no out-edges"),
+            )))
+            ranks = inflow.join(back, "node", "left").select(
+                "node", sink.otherwise(r).alias("r"),
+                sink.otherwise(F.col("_out")).alias("_out"))
+        elif i < iterations - 1:
+            ranks = ranks.join(back, "node")
+        if i < iterations - 1 and (dangling or i % 2 == 1):
+            ranks = ranks.localCheckpoint()
+    return ranks.select("node", "r")
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -473,104 +624,19 @@ def pagerank(
     partitions: int | None = None,
     symmetric: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a DIRECTED edge list (symmetrize
-    first for undirected graphs): returns ``(node, r)``.
+    """Fixed-iteration PageRank over a DIRECTED edge list: returns
+    ``(node, r)`` (the loop is :func:`_pagerank`). Every contribution
+    and rank is rounded to 12 places, so the ranks do not depend on
+    partitioning and the driver query's SQL oracle (the iterations
+    unrolled as chained CTEs) matches them bit for bit.
 
-    Loop discipline (reworked in round 3 — the sf0.1 cost of the old
-    shape was pure scheduler/materialization overhead, not data):
-
-    * the edge+out-degree invariant is built with ONE pass — window
-      ``count() over (partition by s)`` instead of a groupBy+join —
-      and checkpointed ONCE, partitioned by the aggregation key ``t``
-      so every iteration's ``groupBy(t)`` reuses that partitioning
-      with no exchange under the broadcast-rank join;
-    * the teleport/damping update is folded into the aggregate's
-      projection (no per-iteration nodes join — nodes with no
-      in-edges are handled by a ONE-TIME anti-join fill, empty for
-      any symmetrized graph);
-    * iterations stay LAZY, checkpointing every second round only:
-      each rank frame is consumed exactly once by the next join, so
-      skipping the per-iteration materialization removes whole jobs
-      without recomputing anything; the periodic checkpoint bounds
-      Catalyst re-analysis for large ``iterations``.
-
-    Only (node, rank) pairs ever shuffle. Contributions are rounded
-    and routed through DECIMAL so partial-aggregation order cannot
-    move the result (cross-engine reproducible — the driver query's
-    oracle unrolls the same iterations as chained SQL CTEs).
-
-    Nodes with no in-edges keep receiving only the teleport term; nodes
-    with no OUT-edges (dangling) are not redistributed — see
-    :func:`pagerank_dangling` for the lost-mass-corrected variant.
-    """
-    partitions = _default_partitions(edges, partitions)
-    # one-pass edge+degree build: repartition by source, window count
-    # over the clustered partitions, ONE checkpoint. (A groupBy-degree
-    # + join-back build was measured 1.5-2s SLOWER at sf0.1 despite
-    # fewer exchanges — two full materializations beat one exchange
-    # pair; see PLANS.md round-3 notes.)
-    w_deg = Window.partitionBy("s")
-    ed = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .repartition(partitions, "s")
-        .withColumn("_deg", F.count(F.lit(1)).over(w_deg).cast("double"))
-        .localCheckpoint()
-    )
-    nodes = (
-        ed.select(F.col("s").alias("node"))
-        .unionByName(ed.select(F.col("t").alias("node")))
-        .distinct()
-        .localCheckpoint()  # loop invariant - don't re-derive per iteration
-    )
-    n_nodes = nodes.count()
-    inv_n = 1.0 / float(n_nodes)
-    # one-time fill for nodes with no in-edges (empty on symmetrized
-    # graphs): their rank is the constant teleport term every iteration
-    if symmetric:
-        # caller guarantees every node has an in-edge (symmetrized
-        # graph) — skip the anti-join + count + checkpoint jobs
-        no_in, has_no_in = None, False
-    else:
-        no_in = nodes.join(
-            ed.select(F.col("t").alias("node")).distinct(), "node", "left_anti"
-        ).localCheckpoint()
-        has_no_in = no_in.count() > 0
-    # ranks is one row per node; below ~4M nodes (~64MB of (long,
-    # double) pairs) ship it broadcast so the |E|-row edge table never
-    # re-shuffles per iteration — halves iteration wall time. Bigger
-    # graphs fall back to the shuffled hash join (the 100TB-safe path).
-    bcast = n_nodes <= 4_000_000
-    if not bcast:
-        # shuffled-join path: the per-iteration join is on ed.s, so the
-        # invariant must be partitioned by s (one extra one-time
-        # materialization that amortizes over iterations); the
-        # groupBy(t) shuffle then moves only map-combined (node,
-        # partial-sum) pairs — the classic big-graph shape
-        ed = ed.repartition(partitions, "s").localCheckpoint()
-    # (1.0 - damping) folded in Python = the same IEEE subtraction the
-    # SQL oracle performs at runtime; do NOT substitute a decimal
-    # literal like 0.15 (1.0 - 0.85 != 0.15 in binary)
-    teleport = F.lit(1.0 - damping) * F.lit(inv_n)
-    ranks = nodes.select("node", F.lit(inv_n).alias("r"))
-    for i in range(iterations):
-        contrib = F.round(F.col("r") / F.col("_deg"), 12).cast("decimal(38,18)")
-        ranks = (
-            ed.join(F.broadcast(ranks) if bcast else ranks, ed.s == ranks.node)
-            .groupBy(F.col("t").alias("node"))
-            .agg(
-                F.round(
-                    teleport + F.lit(damping) * F.sum(contrib).cast("double"),
-                    12,
-                ).alias("r")
-            )
-        )
-        if has_no_in:
-            ranks = ranks.unionByName(
-                no_in.select("node", F.round(teleport, 12).alias("r"))
-            )
-        if i % 2 == 1 and i < iterations - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks
+    ``symmetric=True``: the caller guarantees every node has both in-
+    and out-edges (a symmetrized graph), so the sources are the node
+    list; a target with no out-edges raises. Otherwise nodes with no
+    in-edges keep only the teleport term, and rank on nodes with no
+    out-edges is not redistributed (see :func:`pagerank_dangling`)."""
+    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+    return _pagerank(ed, damping, iterations, partitions, symmetric=symmetric)
 
 
 def pagerank_dangling(
@@ -581,91 +647,69 @@ def pagerank_dangling(
     iterations: int = 3,
     partitions: int | None = None,
 ) -> DataFrame:
-    """PageRank with the standard dangling-mass correction: the rank
-    mass sitting on nodes with no out-edges is redistributed uniformly
-    every iteration —
+    """PageRank with the standard dangling-mass correction: the rank on
+    nodes with no out-edges (``lost``) is redistributed uniformly every
+    iteration, ``r'(v) = (1-d)/N + d * (sum_in contrib(v) + lost/N)``,
+    so total mass does not decay on graphs with sinks. ``lost`` is a
+    one-row aggregate cross-joined in as a broadcast scalar, never
+    collected to the driver."""
+    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+    return _pagerank(ed, damping, iterations, partitions, dangling=True)
 
-        r'(v) = (1-d)/N + d * (sum_in contrib(v) + lost/N)
 
-    where ``lost = sum(r over dangling nodes)``. Without this term
-    (:func:`pagerank`) total rank mass decays on graphs with sinks.
+def pagerank_personalized(
+    edges: DataFrame,
+    seeds: list[int],
+    src: str = "src",
+    dst: str = "dst",
+    damping: float = 0.85,
+    iterations: int = 3,
+    partitions: int | None = None,
+    symmetric: bool = False,
+    degree: str | None = None,
+) -> DataFrame:
+    """Personalized PageRank: teleport and initial mass concentrate on
+    ``seeds``, so rank diffuses outward from them (related-items
+    ranking); non-seed nodes unreachable from the seeds stay at 0.
+    ``symmetric`` as in :func:`pagerank`.
 
-    Mechanics: the dangling set is a one-time anti-join; ``lost`` per
-    iteration is a 1-row DECIMAL-summed aggregate cross-joined in as a
-    broadcast scalar (never collected to the driver). Ranks are
-    consumed twice per iteration (contribution join + lost sum), so
-    each iteration checkpoints — the cost of correctness on sink-heavy
-    graphs. All arithmetic is round/DECIMAL-routed exactly like
-    :func:`pagerank` so a chained-CTE SQL oracle reproduces it.
-    """
-    partitions = _default_partitions(edges, partitions)
-    # same one-pass window edge+degree build as :func:`pagerank`
-    w_deg = Window.partitionBy("s")
-    ed = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .repartition(partitions, "s")
-        .withColumn("_deg", F.count(F.lit(1)).over(w_deg).cast("double"))
-        .localCheckpoint()
-    )
-    nodes = (
-        ed.select(F.col("s").alias("node"))
-        .unionByName(ed.select(F.col("t").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    inv_n = 1.0 / float(n_nodes)
-    no_in = nodes.join(
-        ed.select(F.col("t").alias("node")).distinct(), "node", "left_anti"
-    ).localCheckpoint()
-    has_no_in = no_in.count() > 0
-    dang = nodes.join(
-        ed.select(F.col("s").alias("node")).distinct(), "node", "left_anti"
-    ).localCheckpoint()
-    bcast = n_nodes <= 4_000_000
-    if not bcast:
-        ed = ed.repartition(partitions, "s").localCheckpoint()
-    teleport = F.lit(1.0 - damping) * F.lit(inv_n)
-    ranks = nodes.select("node", F.lit(inv_n).alias("r")).localCheckpoint()
-    for _ in range(iterations):
-        lost = (
-            ranks.join(F.broadcast(dang), "node", "left_semi")
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("r").cast("decimal(38,18)")).cast("double"),
-                    F.lit(0.0),
-                ).alias("_lost")
-            )
-        )
-        contrib = F.round(F.col("r") / F.col("_deg"), 12).cast("decimal(38,18)")
-        incoming = (
-            ed.join(F.broadcast(ranks) if bcast else ranks, ed.s == ranks.node)
-            .groupBy(F.col("t").alias("node"))
-            .agg(F.sum(contrib).cast("double").alias("_in"))
-            .crossJoin(F.broadcast(lost))
-            .select(
-                "node",
-                F.round(
-                    teleport
-                    + F.lit(damping)
-                    * (F.col("_in") + F.col("_lost") * F.lit(inv_n)),
-                    12,
-                ).alias("r"),
-            )
-        )
-        if has_no_in:
-            incoming = incoming.unionByName(
-                no_in.crossJoin(F.broadcast(lost)).select(
-                    "node",
-                    F.round(
-                        teleport
-                        + F.lit(damping) * (F.col("_lost") * F.lit(inv_n)),
-                        12,
-                    ).alias("r"),
-                )
-            )
-        ranks = incoming.localCheckpoint()
-    return ranks
+    ``degree``: a pre-computed out-degree column on ``edges``. The
+    caller's frame is then the loop invariant as is (no repartition +
+    checkpoint), so it should be a materialized leaf, ideally
+    partitioned by ``src``. The column is checked on the job that
+    builds the node table: a stale or non-integral one raises
+    ``ValueError`` instead of silently mis-ranking."""
+    if not seeds:
+        raise ValueError("pagerank_personalized: seeds must be non-empty")
+    if len(set(seeds)) != len(seeds):
+        # a duplicated seed would silently double its share of the
+        # teleport mass (1/len splits over occurrences, not ids)
+        raise ValueError("pagerank_personalized: duplicate seed ids")
+    deg = [] if degree is None else [F.col(degree).cast("double").alias("_deg")]
+    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"), *deg)
+    return _pagerank(ed, damping, iterations, partitions, symmetric=symmetric,
+                     seeds=seeds, degree=degree)
+
+
+def pagerank_weighted(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str | None = None,
+    damping: float = 0.85,
+    iterations: int = 3,
+    partitions: int | None = None,
+    symmetric: bool = False,
+) -> DataFrame:
+    """PageRank with edge weights: a node's rank flows to its
+    out-neighbours in proportion to edge weight,
+    ``round(r(u) * w / sum_out w, 12)`` per edge; ``weight=None`` is
+    :func:`pagerank`'s uniform split, bit for bit. The weight sums come
+    from the ``groupBy(s)`` that counts degrees in the uniform case.
+    ``symmetric`` as in :func:`pagerank`."""
+    w = [] if weight is None else [F.col(weight).cast("double").alias("_w")]
+    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"), *w)
+    return _pagerank(ed, damping, iterations, partitions, symmetric=symmetric)
 
 
 def triangle_counts(
@@ -854,152 +898,6 @@ def clustering_coefficient(
     )
 
 
-def pagerank_personalized(
-    edges: DataFrame,
-    seeds: list[int],
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iterations: int = 3,
-    partitions: int | None = None,
-    symmetric: bool = False,
-    degree: str | None = None,
-) -> DataFrame:
-    """Personalized PageRank: the teleport vector concentrates on the
-    ``seeds`` set instead of spreading uniformly — the standard
-    related-items / local-relevance ranking (rank mass diffuses
-    outward from the seeds through the link structure).
-
-    Same loop discipline as :func:`pagerank` (one checkpointed
-    edge+degree invariant, broadcast-rank join under 4M nodes,
-    DECIMAL-routed contributions, lazy iterations with periodic
-    checkpoints); the only differences are the seed-conditional
-    teleport term and the seed-concentrated initial vector. Non-seed
-    nodes unreachable from the seeds correctly converge to rank 0.
-
-    ``degree``: name of a pre-computed out-degree column on ``edges``.
-    Callers that already materialized the (src, dst, out-degree)
-    invariant (e.g. to derive the seed set from the same frame) pass
-    it here and the builder's repartition + window + checkpoint pass
-    is skipped — the caller's frame is used as the loop invariant
-    directly, so it should be a materialized leaf (localCheckpoint /
-    cached), or each iteration re-computes it. The column is
-    contract-checked loudly before the loop (positive integral values
-    everywhere + a probed source's actual row count vs its claimed
-    degree) so a stale column raises instead of silently mis-ranking.
-    """
-    if not seeds:
-        raise ValueError("pagerank_personalized: seeds must be non-empty")
-    if len(set(seeds)) != len(seeds):
-        # a duplicated seed would silently double its share of the
-        # teleport mass (1/len splits over occurrences, not ids)
-        raise ValueError("pagerank_personalized: duplicate seed ids")
-    partitions = _default_partitions(edges, partitions)
-    if degree is not None:
-        ed = edges.select(
-            F.col(src).alias("s"),
-            F.col(dst).alias("t"),
-            F.col(degree).cast("double").alias("_deg"),
-        )
-        # Fail LOUDLY on contract violations (r8 ADVICE low #3): a
-        # stale or miscomputed degree column (computed before a filter,
-        # or per-distinct-target) silently produces wrong ranks. Two
-        # narrow scans over the caller's materialized frame: (1) every
-        # _deg must be a positive integer; (2) one probed source's
-        # actual out-edge count must equal its claimed degree — the
-        # cheap spot-check that catches the computed-before-a-filter
-        # class without re-running the full window build this parameter
-        # exists to skip.
-        bad = ed.filter(
-            F.col("_deg").isNull()
-            | (F.col("_deg") < 1)
-            | (F.col("_deg") != F.floor(F.col("_deg")))
-        )
-        if not bad.isEmpty():
-            row = bad.first()
-            raise ValueError(
-                "pagerank_personalized: degree column "
-                f"{degree!r} violates its contract (must be a positive "
-                f"integer per edge row): offending row {row}"
-            )
-        probe = ed.select("s", "_deg").first()
-        if probe is not None:
-            actual = ed.filter(F.col("s") == probe["s"]).count()
-            if actual != int(probe["_deg"]):
-                raise ValueError(
-                    "pagerank_personalized: degree column "
-                    f"{degree!r} is inconsistent with the edge set: "
-                    f"source {probe['s']!r} claims out-degree "
-                    f"{int(probe['_deg'])} but has {actual} edge rows "
-                    "(was it computed before a filter, or per distinct "
-                    "target?)"
-                )
-    else:
-        w_deg = Window.partitionBy("s")
-        ed = (
-            edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-            .repartition(partitions, "s")
-            .withColumn("_deg", F.count(F.lit(1)).over(w_deg).cast("double"))
-            .localCheckpoint()
-        )
-    nodes = (
-        ed.select(F.col("s").alias("node"))
-        .unionByName(ed.select(F.col("t").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if symmetric:
-        # caller guarantees every node has an in-edge (symmetrized
-        # graph) — skip the anti-join + count + checkpoint jobs
-        no_in, has_no_in = None, False
-    else:
-        no_in = nodes.join(
-            ed.select(F.col("t").alias("node")).distinct(), "node", "left_anti"
-        ).localCheckpoint()
-        has_no_in = no_in.count() > 0
-    bcast = n_nodes <= 4_000_000
-    if not bcast:
-        ed = ed.repartition(partitions, "s").localCheckpoint()
-
-    inv_s = 1.0 / float(len(seeds))
-    tele_val = (1.0 - damping) * inv_s  # same IEEE ops as the oracle
-
-    def teleport(node_col):
-        return F.when(
-            node_col.isin(seeds), F.lit(tele_val)
-        ).otherwise(F.lit(0.0))
-
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("node").isin(seeds), F.lit(inv_s))
-        .otherwise(F.lit(0.0))
-        .alias("r"),
-    )
-    for i in range(iterations):
-        contrib = F.round(F.col("r") / F.col("_deg"), 12).cast("decimal(38,18)")
-        ranks = (
-            ed.join(F.broadcast(ranks) if bcast else ranks, ed.s == ranks.node)
-            .groupBy(F.col("t").alias("node"))
-            .agg(
-                F.round(
-                    teleport(F.col("t"))
-                    + F.lit(damping) * F.sum(contrib).cast("double"),
-                    12,
-                ).alias("r")
-            )
-        )
-        if has_no_in:
-            ranks = ranks.unionByName(
-                no_in.select(
-                    "node", F.round(teleport(F.col("node")), 12).alias("r")
-                )
-            )
-        if i % 2 == 1 and i < iterations - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks
-
-
 def _kcore_local(pdf, k: int):
     """Driver-local k-core peel over a collected canonical (a, b) edge
     list — the same synchronous delete-all-sub-k schedule as the
@@ -1161,77 +1059,6 @@ def kcore(
             f"({remaining} nodes still below degree {k}); raise max_iter"
         )
     return deg.filter(F.col("degree") >= k)
-
-
-def pagerank_weighted(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-    damping: float = 0.85,
-    iterations: int = 3,
-    partitions: int | None = None,
-    symmetric: bool = False,
-) -> DataFrame:
-    """PageRank with edge weights: each node's rank flows to its
-    out-neighbors proportionally to edge weight (weight=None
-    degenerates to :func:`pagerank`'s uniform split). Same loop
-    discipline — the per-source weight NORMALIZATION rides the same
-    one-pass window build that computes the degree in the uniform
-    variant, so the invariant costs exactly one checkpoint either
-    way."""
-    partitions = _default_partitions(edges, partitions)
-    w_src = Window.partitionBy("s")
-    wcol = (
-        F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    )
-    ed = (
-        edges.select(
-            F.col(src).alias("s"), F.col(dst).alias("t"), wcol.alias("_w")
-        )
-        .repartition(partitions, "s")
-        .withColumn("_wsum", F.sum("_w").over(w_src))
-        .localCheckpoint()
-    )
-    nodes = (
-        ed.select(F.col("s").alias("node"))
-        .unionByName(ed.select(F.col("t").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    inv_n = 1.0 / float(n_nodes)
-    if symmetric:
-        no_in, has_no_in = None, False
-    else:
-        no_in = nodes.join(
-            ed.select(F.col("t").alias("node")).distinct(), "node", "left_anti"
-        ).localCheckpoint()
-        has_no_in = no_in.count() > 0
-    bcast = n_nodes <= 4_000_000
-    teleport = F.lit(1.0 - damping) * F.lit(inv_n)
-    ranks = nodes.select("node", F.lit(inv_n).alias("r"))
-    for i in range(iterations):
-        contrib = F.round(
-            F.col("r") * F.col("_w") / F.col("_wsum"), 12
-        ).cast("decimal(38,18)")
-        ranks = (
-            ed.join(F.broadcast(ranks) if bcast else ranks, ed.s == ranks.node)
-            .groupBy(F.col("t").alias("node"))
-            .agg(
-                F.round(
-                    teleport + F.lit(damping) * F.sum(contrib).cast("double"),
-                    12,
-                ).alias("r")
-            )
-        )
-        if has_no_in:
-            ranks = ranks.unionByName(
-                no_in.select("node", F.round(teleport, 12).alias("r"))
-            )
-        if i % 2 == 1 and i < iterations - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks
 
 
 def bfs_distances(

@@ -545,9 +545,10 @@ def kmeans_fit(
     one fixed float expression. Clusters that lose every member keep
     their previous centroid (the standard Lloyd guard).
 
-    Scale shape per iteration: ONE distributed job — posexplode +
+    Scale shape per iteration: one collect of a posexplode +
     map-side-combined (label, i) aggregate collapsing to k*d rows
-    collected to the driver (k*d is tiny by construction). The loop is
+    (k*d is tiny by construction). Under AQE that collect runs 3 Spark
+    jobs: the centroid broadcast, the map stage and the result. The loop is
     driver-coordinated like the other iterative operators; no
     iteration-over-iteration lineage growth because each assignment
     plan references only the source frame + literal centroids.

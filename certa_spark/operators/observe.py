@@ -40,3 +40,16 @@ def funnel_report(observations: list[Observation]) -> dict[str, int]:
         for k, v in ob.get.items():
             out[k] = int(v) if v is not None else 0
     return out
+
+
+def checkpoint_observed(
+    df: DataFrame, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint()`` plus aggregate ``metrics`` over its rows,
+    computed by the checkpoint's own job: returns (checkpointed_df,
+    {name: value}), with no extra count() pass."""
+    obs = Observation()
+    done = df.observe(
+        obs, *(c.alias(name) for name, c in metrics.items())
+    ).localCheckpoint()
+    return done, dict(obs.get)

@@ -1566,12 +1566,12 @@ _Q_DOC_STRATIFIED_K_SQL = f"""
 
 def q_part_pagerank(spark, sf_dir) -> DataFrame:
     """PageRank over the part co-purchase graph (parts sharing an
-    order), 3 power iterations. Spark side: edge build = one self-join
-    + distinct, then per-iteration join + groupBy with lineage
-    truncation (operators/graph.py pattern); contributions route
-    through DECIMAL so partial-agg order can't move the result. The
-    oracle UNROLLS the iterations as chained CTEs — same fixed point,
-    different engine mechanics."""
+    order), 3 power iterations. Spark side: edge build = one groupBy
+    order + distinct, both directions in one pass, then the shared
+    PageRank loop (graph._pagerank); contributions are summed as exact
+    1e-12 units so partial-agg order can't move the result. The
+    oracle UNROLLS the iterations as chained CTEs with per-edge DECIMAL
+    sums — same values, different engine mechanics."""
     from certa_spark.operators import graph as GR
 
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -1582,12 +1582,9 @@ def q_part_pagerank(spark, sf_dir) -> DataFrame:
     # that) take cooccurrence_pairs' chunked pre-split path so no
     # single row ever holds a quadratic pair array.
     pairs = GR.cooccurrence_pairs(l, key="l_orderkey", item="l_partkey")
-    edges = pairs.select(
-        F.col("pa").alias("s"), F.col("pb").alias("t")
-    ).unionByName(pairs.select(F.col("pb").alias("s"), F.col("pa").alias("t")))
     ranks = GR.pagerank(
-        edges, src="s", dst="t", damping=0.85, iterations=3,
-        symmetric=True,  # edges unioned both directions above
+        GR.symmetrized(pairs), src="s", dst="t", damping=0.85, iterations=3,
+        symmetric=True,
     )
     return ranks.select("node", F.round("r", 8).alias("rank"))
 
@@ -7680,23 +7677,15 @@ def q_part_pagerank_personalized(spark, sf_dir) -> DataFrame:
         .filter(F.col("l_orderkey") % 3 == 0)
         .select("l_orderkey", "l_partkey")
     )
-    from pyspark.sql.window import Window
-
     pairs = GR.cooccurrence_pairs(l, key="l_orderkey", item="l_partkey")
-    # ONE materialization serves seeds AND the PR loop invariant: the
-    # symmetrized edges are checkpointed WITH the window out-degree in
-    # the same pass, and pagerank_personalized(degree=...) skips its
-    # own repartition+window+checkpoint rebuild of the identical frame
-    parts = spark.sparkContext.defaultParallelism
+    # ONE materialization serves the seeds AND the PR loop invariant:
+    # the edges are checkpointed partitioned by s WITH their window
+    # out-degree, so pagerank_personalized(degree=...) runs on this
+    # frame as is instead of re-partitioning and re-checkpointing it
     edges = (
-        pairs.select(F.col("pa").alias("s"), F.col("pb").alias("t"))
-        .unionByName(
-            pairs.select(F.col("pb").alias("s"), F.col("pa").alias("t"))
-        )
-        .repartition(parts, "s")
-        .withColumn(
-            "deg", F.count(F.lit(1)).over(Window.partitionBy("s"))
-        )
+        GR.symmetrized(pairs)
+        .repartition(spark.sparkContext.defaultParallelism, "s")
+        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("s")))
         .localCheckpoint()
     )
     seeds = [
@@ -10119,26 +10108,16 @@ def q_part_louvain(spark, sf_dir) -> DataFrame:
     # operator docstring) — at sf0.1 level 0 (39.9k edges) runs
     # distributed and level 1 (13.2k edges, 360KB collected) finishes
     # locally, replacing ~5 scheduler-bound tiny Spark rounds.
-    # The distributed rounds run at 8 shuffle partitions
-    # (try/finally-restored — the _drain_stream sizing precedent):
-    # the proposal chain's AQE-planned aggregates between the pinned
-    # repartition(8) frames otherwise plan 32-64 task waves over
-    # <=40k-row exchanges. Paired min-of-3 at sf0.1: 11.26 -> 9.68 s
-    # under 1.02/0.54 ambient (~-14%); output partition-invariant
-    # (rows asserted identical). r10 profile (tools/profile_jobs.py):
-    # the residual cost is JOB COUNT x fixed scheduling latency —
-    # ~12 AQE sub-jobs per accepted round from the one heavy J-gate
-    # job — not data; AQE OFF was measured and DECLINED at ~4x WORSE
-    # (static 32/64-partition shuffles dwarf the coalesced plans).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out, hist = GR.louvain(
-            pairs, src="pa", dst="pb", max_rounds=5, max_levels=2,
-            partitions=8, with_history=True, local_max_edges=15_000,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    # partitions=8 pins the round frames; the session's shuffle width
+    # is left alone (library code writes no session conf). The
+    # residual cost is JOB COUNT x fixed scheduling latency (~12 AQE
+    # sub-jobs per accepted round from the one heavy J-gate job), not
+    # data; AQE OFF was measured ~4x WORSE (static 32/64-partition
+    # shuffles dwarf the coalesced plans).
+    out, hist = GR.louvain(
+        pairs, src="pa", dst="pb", max_rounds=5, max_levels=2,
+        partitions=8, with_history=True, local_max_edges=15_000,
+    )
     # one action: the community sizes, folded on the driver
     sizes = dict(out.groupBy("community").agg(F.count("*")).collect())
     named = {c: n for c, n in sizes.items() if c is not None}

@@ -53,3 +53,29 @@ def test_no_single_partition_exchange_in_plan(spark):
     plan = generate_modified(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan
     assert "Window" not in plan
+
+
+def test_expand_copies_rows_match_generate_modified(spark):
+    """The DA fallback builds its copies on the driver; they must be
+    ``generate_modified``'s rows, ids and order included. Java's ``\\s``
+    splits on tabs and runs of spaces but not on a non-breaking space,
+    which Python's ``str.split()`` would split on."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from certa_spark.operators.augment import expand_copies
+
+    left = {"id": 3, "name": "a\tb  c\n", "descr": "x y z", "price": 7}
+    right = {"id": 11, "name": "solo", "descr": " \x0bp\x0cq\rr ", "price": "1 2"}
+    copies = expand_copies(spark, left, right, n_lsource=50, n_rsource=40)
+    for record, start, got in ((left, 40, copies[0]), (right, 50, copies[1])):
+        names = sorted(record)
+        one = spark.createDataFrame(
+            [tuple(str(record[k]) for k in names)],
+            StructType([StructField(k, StringType()) for k in names]),
+        )
+        want = generate_modified(one, start_id=start)
+        assert got.schema == want.schema
+        assert [tuple(r) for r in got.collect()] == [
+            tuple(r) for r in want.collect()
+        ]
+        assert got.count() > 0

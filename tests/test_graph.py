@@ -53,6 +53,163 @@ def test_pagerank_symmetric_pair_and_star(spark):
     assert ranks[9] > ranks[1] == ranks[2] == ranks[3]
     assert abs(ranks[1] - (1 - 0.85) / 4) < 1e-9
 
+
+def _decimal_pagerank(edges, iterations, weight=None, seeds=None,
+                      dangling=False, damping=0.85):
+    """The per-edge DECIMAL formula the PageRank loop was first written
+    with, as the reference for its exact long-unit sums: every
+    contribution ``round(r * w / sum_out w, 12)`` is cast to
+    DECIMAL(38,18), summed per target and cast back to double."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    w = F.col(weight).cast("double") if weight else F.lit(1.0)
+    ed = edges.select(
+        F.col("src").alias("s"), F.col("dst").alias("t"), w.alias("_w")
+    ).withColumn("_wsum", F.sum("_w").over(Window.partitionBy("s")))
+    nodes = (
+        ed.select(F.col("s").alias("node"))
+        .union(ed.select(F.col("t").alias("node"))).distinct()
+    )
+    inv_n = 1.0 / nodes.count()
+    no_in = nodes.join(ed.select(F.col("t").alias("node")), "node", "left_anti")
+    sinks = nodes.join(ed.select(F.col("s").alias("node")), "node", "left_anti")
+    if seeds:
+        inv_s = 1.0 / len(seeds)
+        tele = F.when(F.col("node").isin(seeds), (1.0 - damping) * inv_s)
+        tele = tele.otherwise(0.0)
+        r0 = F.when(F.col("node").isin(seeds), inv_s).otherwise(0.0)
+    else:
+        tele, r0 = F.lit(1.0 - damping) * F.lit(inv_n), F.lit(inv_n)
+    ranks = nodes.select("node", r0.alias("r")).localCheckpoint()
+    for _ in range(iterations):
+        contrib = F.round(F.col("r") * F.col("_w") / F.col("_wsum"), 12)
+        inflow = (
+            ed.join(ranks, ed.s == ranks.node)
+            .groupBy(F.col("t").alias("node"))
+            .agg(F.sum(contrib.cast("decimal(38,18)")).cast("double").alias("_in"))
+        )
+        if dangling:
+            lost = ranks.join(sinks, "node", "left_semi").agg(
+                F.coalesce(
+                    F.sum(F.col("r").cast("decimal(38,18)")).cast("double"),
+                    F.lit(0.0),
+                )
+            ).first()[0]
+            spread = F.lit(lost) * F.lit(inv_n)
+            ranks = inflow.select(
+                "node",
+                F.round(tele + damping * (F.col("_in") + spread), 12).alias("r"),
+            ).union(
+                no_in.select("node", F.round(tele + damping * spread, 12))
+            )
+        else:
+            ranks = inflow.select(
+                "node", F.round(tele + damping * F.col("_in"), 12).alias("r")
+            ).union(no_in.select("node", F.round(tele, 12)))
+        ranks = ranks.localCheckpoint()
+    return dict(ranks.collect())
+
+
+def test_pagerank_unit_sums_match_decimal_sums(spark):
+    """Every PageRank variant sums its contributions as exact long counts
+    of 1e-12 units; the ranks must equal, bit for bit, the per-edge
+    DECIMAL(38,18) sums they replace. The seeded graph has sinks, nodes
+    without in-edges, hubs with hundreds of in-edges (long exact sums)
+    and integer weights."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from certa_spark.operators.graph import (
+        pagerank,
+        pagerank_dangling,
+        pagerank_personalized,
+        pagerank_weighted,
+    )
+
+    rng = random.Random(20)
+    n = 400
+    pairs = {(rng.randrange(n - 20), rng.randrange(20, n)) for _ in range(2500)}
+    pairs |= {(u, h) for h in (20, 21, 22) for u in rng.sample(range(n - 20), 300)}
+    pairs = {(a, b) for a, b in pairs if a != b}
+    rows = [(a, b, rng.randint(1, 9)) for a, b in sorted(pairs)]
+    edges = spark.createDataFrame(rows, "src long, dst long, w long")
+    und = {(a, b) for a, b, _ in rows} | {(b, a) for a, b, _ in rows}
+    sym = spark.createDataFrame(sorted(und), "src long, dst long")
+    sym3 = sym.withColumn("w", F.lit(3))
+    seeds = [0, 5, 21, 377]
+    deg = sym.join(
+        sym.groupBy(F.col("src").alias("k")).agg(F.count("*").alias("deg")),
+        F.col("src") == F.col("k"),
+    ).select("src", "dst", "deg").localCheckpoint()
+
+    cases = [
+        (pagerank(edges, iterations=3), {}, edges),
+        (pagerank(sym, iterations=3, symmetric=True), {}, sym),
+        (pagerank_dangling(edges, iterations=3), {"dangling": True}, edges),
+        (pagerank_weighted(edges, weight="w", iterations=3), {"weight": "w"}, edges),
+        (pagerank_weighted(sym3, weight="w", iterations=3, symmetric=True),
+         {"weight": "w"}, sym3),
+        (pagerank_personalized(edges, seeds, iterations=3), {"seeds": seeds}, edges),
+        (pagerank_personalized(sym, seeds, iterations=3, symmetric=True),
+         {"seeds": seeds}, sym),
+        (pagerank_personalized(deg, seeds, iterations=3, symmetric=True,
+                               degree="deg"), {"seeds": seeds}, sym),
+    ]
+    for got, kw, graph in cases:
+        want = _decimal_pagerank(graph, 3, **kw)
+        assert dict(got.collect()) == want, kw
+
+
+def test_pagerank_job_budget(spark):
+    """A symmetric ``pagerank(iterations=3)`` launches 13 Spark jobs: the
+    edge checkpoint (2), the degree table whose checkpoint also counts
+    the nodes (2), per iteration one broadcast of the source-side
+    contributions and one edge stage, and the broadcast of the degree
+    table the ranks join back. The per-edge DECIMAL loop it replaced
+    launched 14: its window degree build, node list and node count ran
+    apart."""
+    from tests.test_explainer import _jobs_of
+
+    from certa_spark.operators.graph import pagerank
+
+    pairs = {(i, (7 * i + k) % 60) for i in range(60) for k in (1, 2, 3)}
+    pairs = {(a, b) for a, b in pairs if a != b}
+    edges = spark.createDataFrame(
+        sorted(pairs | {(b, a) for a, b in pairs}), "src long, dst long"
+    )
+    pagerank(edges, iterations=3, symmetric=True).collect()
+    n_jobs, ranks = _jobs_of(
+        spark, "pagerank-job-budget",
+        lambda: pagerank(edges, iterations=3, symmetric=True).collect(),
+    )
+    assert len(ranks) == 60
+    assert n_jobs <= 13, n_jobs
+
+
+def test_pagerank_symmetric_sink_raises(spark):
+    """``symmetric=True`` takes the node list from the sources, so a
+    target with no out-edges (a cycle feeding a sink) would be left out
+    of N: the loop refuses it instead of mis-ranking, for one iteration
+    or many."""
+    import pytest
+
+    from certa_spark.operators.graph import pagerank, pagerank_weighted
+
+    edges = spark.createDataFrame(
+        [(1, 2, 2), (2, 3, 1), (3, 1, 1), (3, 4, 5)], "src long, dst long, w long"
+    )
+    runs = [lambda its: pagerank(edges, iterations=its, symmetric=True),
+            lambda its: pagerank_weighted(edges, weight="w", iterations=its,
+                                          symmetric=True)]
+    for run in runs:
+        for its in (1, 2, 3):
+            with pytest.raises(Exception, match="node 4 has in-edges and no out-edges"):
+                run(its).collect()
+    assert len(pagerank(edges, iterations=3).collect()) == 4
+
+
 def test_cooccurrence_pairs_mega_key_matches_plain(spark):
     """Property: the chunked pre-split path (keys > chunk items) emits
     exactly the plain quadratic pair set — one synthetic hot key with
