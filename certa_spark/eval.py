@@ -16,6 +16,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from certa_spark.explainer import CertaExplainer, Explanation
 from certa_spark.matching import Matcher
@@ -56,8 +57,10 @@ def evaluate(
 ) -> pd.DataFrame:
     """Explain every (l_rec, r_rec) instance; returns one row per
     instance: saliency values + latency + n_triangles (the reference's
-    certa.csv shape, eval.py:99-105)."""
+    certa.csv shape, eval.py:99-105). The pool's threads run in the
+    caller's job group and with its tags."""
 
+    @inheritable_thread_target(spark)
     def one(idx_pair):
         idx, (l_rec, r_rec) = idx_pair
         res, latency, used = explain_instance(

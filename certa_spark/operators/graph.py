@@ -381,87 +381,58 @@ def cooccurrence_pairs(
     """Distinct unordered item pairs co-occurring under a key (the
     co-purchase edge build): returns ``(pa, pb)`` with ``pa < pb``.
 
-    One shuffle (groupBy key) + map-side higher-order-function pair
-    generation for ordinary keys. A pathological mega-key (an order
-    holding thousands of items) would make the single-row pair array
-    quadratic in that key's item count, so keys above ``chunk`` items
-    take a pre-split path: the sorted item set is sliced into
-    ``chunk``-sized blocks, intra-block pairs come from the same HOF,
-    and cross-block pairs from a block×block self-join — every output
-    row is bounded by ``chunk²`` pairs, and one hot key fans out over
-    ``m(m+1)/2`` rows instead of concentrating in one. The split path
-    touches only the (rare) oversized keys, so the common case pays
-    nothing beyond one filter.
+    One shuffle (groupBy key, sorted ``collect_set``), then one map-side
+    pass: each key's item array is cut into ``chunk``-sized blocks and
+    exploded into the block pairs ``(i, j)``, ``j >= i``, keeping only
+    the two slices. A diagonal row yields its in-block pairs, an
+    off-diagonal row the cross product of its two slices. So no row
+    holds more than ``chunk²`` pairs, none holds more than its key's
+    item array, and a key of n items builds exactly n(n-1)/2 pairs
+    (nothing is generated and then filtered). The array is sorted, so
+    every element of block i precedes every element of block j > i and
+    each pair comes out once per key with ``pa < pb``.
 
-    Slicing a SORTED item array keeps ``pa < pb`` canonical on the
-    cross-block path (every element of block i precedes every element
-    of block j>i), so both paths emit the identical pair set.
+    ``distinct_pairs=False`` keeps one row per (key, pair) occurrence,
+    the stream a co-occurrence COUNT (e.g. PMI) aggregates; the default
+    dedups globally for edge-set consumers (pagerank, CC).
     """
-
-    def hof_pairs(arr):
-        return F.flatten(
-            F.transform(
-                arr,
-                lambda x, i: F.transform(
-                    F.slice(arr, i + 2, F.size(arr)),
-                    lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                ),
-            )
-        )
-
-    g = df.groupBy(F.col(key).alias("_k")).agg(
-        F.array_sort(F.collect_set(item)).alias("_items")
+    items = F.col("_items")
+    # the last block index, at least 0: an empty or one-item key still
+    # gets its one block (sequence(0, -1) would count down)
+    last = F.greatest(
+        F.ceil(F.size(items) / F.lit(chunk)).cast("int") - 1, F.lit(0)
     )
-    small = (
-        g.filter(F.size("_items") <= chunk)
-        .select(F.explode(hof_pairs(F.col("_items"))).alias("e"))
+
+    def block(i: str) -> Column:
+        return F.slice(items, F.col(i) * chunk + 1, chunk)
+
+    # the item at position p of block i pairs with the items after it
+    # in its own block (diagonal), or with every item of block j > i
+    b = F.col("_b")
+    pairs = F.flatten(
+        F.transform(
+            F.col("_a"),
+            lambda x, p: F.transform(
+                F.slice(b, F.when(F.col("_d"), p + 2).otherwise(1), F.size(b)),
+                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
+            ),
+        )
+    )
+    out = (
+        df.groupBy(F.col(key).alias("_k"))
+        .agg(F.array_sort(F.collect_set(item)).alias("_items"))
+        .select("_items", F.explode(F.sequence(F.lit(0), last)).alias("_i"))
+        .select(
+            "_items", "_i", F.explode(F.sequence(F.col("_i"), last)).alias("_j")
+        )
+        .select(
+            block("_i").alias("_a"),
+            block("_j").alias("_b"),
+            (F.col("_i") == F.col("_j")).alias("_d"),
+        )
+        .select(F.explode(pairs).alias("e"))
         .select("e.pa", "e.pb")
     )
-    blocks = (
-        g.filter(F.size("_items") > chunk)
-        .select(
-            "_k",
-            F.posexplode(
-                F.transform(
-                    F.sequence(
-                        F.lit(0),
-                        F.ceil(F.size("_items") / F.lit(chunk)).cast("int")
-                        - 1,
-                    ),
-                    lambda b: F.slice(
-                        F.col("_items"), b * chunk + 1, chunk
-                    ),
-                )
-            ).alias("_ci", "_blk"),
-        )
-    )
-    intra = blocks.select(F.explode(hof_pairs(F.col("_blk"))).alias("e")).select(
-        "e.pa", "e.pb"
-    )
-    left = blocks.select("_k", F.col("_ci").alias("_i"), F.col("_blk").alias("_ba"))
-    right = blocks.select("_k", F.col("_ci").alias("_j"), F.col("_blk").alias("_bb"))
-    cross = (
-        left.join(right, ["_k"])
-        .filter(F.col("_i") < F.col("_j"))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("_ba"),
-                        lambda x: F.transform(
-                            F.col("_bb"),
-                            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.pa", "e.pb")
-    )
-    out = small.unionByName(intra).unionByName(cross)
-    # distinct_pairs=False keeps one row per (key, pair) occurrence —
-    # the stream a co-occurrence COUNT (e.g. PMI) aggregates; the
-    # default dedups globally for edge-set consumers (pagerank, CC)
     return out.distinct() if distinct_pairs else out
 
 
@@ -2128,24 +2099,23 @@ def louvain(
         ):
             rows = [(r["a"], r["b"], r["w"]) for r in und.collect()]
             if rows:
-                if proj is None:
-                    # level-0 local finish: the projection is the
-                    # identity over the (tiny) edge list's nodes
-                    proj = (
-                        und.select(F.col("a").alias("node"))
-                        .unionByName(und.select(F.col("b").alias("node")))
-                        .distinct()
-                        .select(
-                            "node", F.col("node").alias("community")
-                        )
-                        .localCheckpoint()
-                    )
                 mapping, hist2, j_best = _louvain_local(
                     rows, max_rounds, max_levels - _level, j_best,
                     with_history,
                 )
                 history.extend(hist2)
-                if mapping:
+                if proj is None:
+                    # level 0: the mapping is the projection. It covers
+                    # every node, unless 2m = 0 left it empty and every
+                    # node stays in its own community
+                    mapping = mapping or {n: n for r in rows for n in r[:2]}
+                    ntype = dict(und.dtypes)["a"]
+                    proj = local_frame(
+                        und.sparkSession,
+                        list(mapping.items()),
+                        f"node {ntype}, community {ntype}",
+                    )
+                elif mapping:
                     ctype = dict(proj.dtypes)["community"]
                     mdf = local_frame(
                         proj.sparkSession,

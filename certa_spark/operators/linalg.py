@@ -35,7 +35,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from certa_spark.functions.litfast import array_lit
@@ -317,6 +317,18 @@ def label_centroid_sums(
     )
 
 
+def _sq_dist(vec_col: str, c: Column) -> Column:
+    """Squared L2 distance of the vector column (as doubles) to the
+    double array ``c``, folded left to right: the same summation order
+    as the oracles' ``list_aggregate`` and the driver's ``cumsum``."""
+    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    return F.aggregate(
+        F.zip_with(xd, c, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def nearest_centroid_confusion(
     df: DataFrame,
     vec_col: str,
@@ -343,19 +355,10 @@ def nearest_centroid_confusion(
         # same expression tree as the oracle: s / (q * 1.0 * n)
         arr[int(r["i"])] = int(r["s"]) / (float(q) * int(r["n"]))
     labels = sorted(by_label)
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cands = []
-    for lab in labels:
-        clit = array_lit([float(v) for v in by_label[lab]])
-        d2 = F.aggregate(
-            F.zip_with(xd, clit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        cands.append(
-            F.struct(d2.alias("d"), F.lit(lab).cast("int").alias("l"))
-        )
-    pred = F.array_sort(F.array(*cands))[0]["l"]
+    # index -> label: labels are sorted, so a tie in the index argmin
+    # still goes to the smaller label
+    nearest = nearest_centroid_expr(vec_col, [by_label[lab] for lab in labels])
+    pred = array_lit(labels).cast("array<int>")[nearest]
     return (
         df.select(
             F.col(label_col).alias("true_label"), pred.alias("pred_label")
@@ -424,23 +427,18 @@ def nearest_centroid_expr(vec_col: str, centroids: list[list[float]]):
     closest centroid (squared L2, ties to the smaller index). Pure
     map-side: centroids ride the plan as literal arrays, distances are
     sequential zip_with/aggregate folds (deterministic summation
-    order), argmin is an array_sort over (distance, index) structs —
-    the same machinery as :func:`nearest_centroid_confusion`. Right
+    order), argmin is an array_sort over (distance, index) structs;
+    :func:`nearest_centroid_confusion` assigns with it. Right
     for ONE-SHOT assignments; iterative loops should use the
     data-column twin :func:`nearest_centroid_col` (see
     :func:`_centroids_frame` for why)."""
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cands = []
-    for idx, c in enumerate(centroids):
-        clit = array_lit([float(v) for v in c])
-        d2 = F.aggregate(
-            F.zip_with(xd, clit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+    cands = [
+        F.struct(
+            _sq_dist(vec_col, array_lit([float(v) for v in c])).alias("d"),
+            F.lit(idx).cast("int").alias("l"),
         )
-        cands.append(
-            F.struct(d2.alias("d"), F.lit(idx).cast("int").alias("l"))
-        )
+        for idx, c in enumerate(centroids)
+    ]
     return F.array_sort(F.array(*cands))[0]["l"]
 
 
@@ -475,16 +473,10 @@ def nearest_centroid_col(vec_col: str, cents_col):
     same order, the same array_sort argmin with ties to the smaller
     index — so assignments are bit-for-bit the twin's (pinned by
     tests/test_linalg.py)."""
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     cands = F.transform(
         cents_col,
         lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(xd, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("d"),
-            i.cast("int").alias("l"),
+            _sq_dist(vec_col, c).alias("d"), i.cast("int").alias("l")
         ),
     )
     return F.array_sort(cands)[0]["l"]
@@ -614,21 +606,13 @@ def kmeans_fit(
     # identical across iterations so whole-stage codegen compiles
     # once (r10 profile: the literal plans spent 6.3 of 8.7 s wall
     # OUTSIDE Spark jobs on per-iteration analysis + recompiles)
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     for _ in range(len(centroids), k):
         # distributed per-pick fallback: the sample ran out of
         # distinct vectors (duplicate-heavy corpus bigger than the
         # oversample). Same expression as the pre-r11 init; also owns
         # the genuine fewer-than-k-distinct failure.
         nearest = F.array_min(
-            F.transform(
-                F.col("_cents"),
-                lambda c: F.aggregate(
-                    F.zip_with(xd, c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            )
+            F.transform(F.col("_cents"), lambda c: _sq_dist(vec_col, c))
         )
         far = (
             base.crossJoin(F.broadcast(_centroids_frame(spark, centroids)))

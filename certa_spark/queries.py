@@ -1577,10 +1577,10 @@ def q_part_pagerank(spark, sf_dir) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # pair build: ONE shuffle (groupBy order) + map-side HOF pair
     # generation, instead of the r1 self-join that shuffled lineitem
-    # twice — 3x faster at sf0.1, same pair set. Oversized orders
-    # (>64 parts; none in TPC-H data, but a 100TB corpus can't assume
-    # that) take cooccurrence_pairs' chunked pre-split path so no
-    # single row ever holds a quadratic pair array.
+    # twice — 3x faster at sf0.1, same pair set. An order is cut into
+    # 64-part blocks in the same pass (none holds more than 64 parts in
+    # TPC-H data, but a 100TB corpus can't assume that), so no single
+    # row ever holds a quadratic pair array.
     pairs = GR.cooccurrence_pairs(l, key="l_orderkey", item="l_partkey")
     ranks = GR.pagerank(
         GR.symmetrized(pairs), src="s", dst="t", damping=0.85, iterations=3,
@@ -10107,7 +10107,9 @@ def q_part_louvain(spark, sf_dir) -> DataFrame:
     # (the coarsen-then-finish design; bit-identical results, see the
     # operator docstring) — at sf0.1 level 0 (39.9k edges) runs
     # distributed and level 1 (13.2k edges, 360KB collected) finishes
-    # locally, replacing ~5 scheduler-bound tiny Spark rounds.
+    # locally, replacing ~5 scheduler-bound tiny Spark rounds. A level
+    # 0 that fits finishes locally as a whole (the perfbench inputs,
+    # 3,974 edges), and the driver's mapping is the result.
     # partitions=8 pins the round frames; the session's shuffle width
     # is left alone (library code writes no session conf). The
     # residual cost is JOB COUNT x fixed scheduling latency (~12 AQE

@@ -330,7 +330,7 @@ def test_explain_batch_matches_per_instance(spark, er_tables):
 def test_explain_batch_chunked_parity(spark, er_tables):
     """Batches above SCAN_BATCH_SIZE (8) split into overlapped chunk
     pipelines — outputs must be ordered and identical across the chunk
-    boundary."""
+    boundary. The chunk workers run in the caller's job group."""
     rows_a, rows_b, A, B = er_tables
     ex = CertaExplainer(spark, A, B, data_augmentation="no")
     m = NativeCosineMatcher()
@@ -338,7 +338,13 @@ def test_explain_batch_chunked_parity(spark, er_tables):
         (dict(zip(COLS, rows_a[i])), dict(zip(COLS, rows_b[i])))
         for i in range(9)
     ]
-    batch = ex.explain_batch(insts, m, num_triangles=10)
+    n_jobs, batch = _jobs_of(
+        spark, "chunked-batch",
+        lambda: ex.explain_batch(insts, m, num_triangles=10),
+    )
+    # each of the 2 chunks runs at least its scan (2 jobs) and its
+    # member lookup (1) in the group
+    assert n_jobs >= 2 * 3, n_jobs
     assert len(batch) == 9
     for i in (0, 5, 8):  # first chunk, first chunk, last partial chunk
         want = ex.explain(insts[i][0], insts[i][1], m, num_triangles=10)

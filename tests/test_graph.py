@@ -211,25 +211,54 @@ def test_pagerank_symmetric_sink_raises(spark):
 
 
 def test_cooccurrence_pairs_mega_key_matches_plain(spark):
-    """Property: the chunked pre-split path (keys > chunk items) emits
-    exactly the plain quadratic pair set — one synthetic hot key with
-    150 items (crossing several 16-item chunks) plus normal keys."""
+    """Property: the chunked pair build emits exactly the plain
+    quadratic pairs of every key, whatever its size against ``chunk``:
+    one synthetic hot key with 150 items (crossing several 16-item
+    chunks), keys of exactly chunk, chunk+1, 2*chunk and 2*chunk+1
+    items, a one-item key, a null-only key, a key with repeated items
+    and normal keys; at chunk 16 and 1, deduplicated and as the per-key
+    multiset (``distinct_pairs=False``)."""
+    from collections import Counter
     from itertools import combinations
 
     from certa_spark.operators.graph import cooccurrence_pairs
 
     rows = [(1, i * 7 % 1000) for i in range(150)]  # hot key, 150 items
     rows += [(2, x) for x in (5, 9)] + [(3, x) for x in (9, 5, 77)]
+    for key, n in ((4, 16), (5, 17), (6, 32), (7, 33)):
+        rows += [(key, 3 * i + key) for i in range(n)]
+    rows += [(8, 5), (9, None), (9, None), (10, 9), (10, 5), (10, 9), (10, 5)]
     df = spark.createDataFrame(rows, "k long, v long")
-    got = {
-        (r["pa"], r["pb"])
-        for r in cooccurrence_pairs(df, "k", "v", chunk=16).collect()
-    }
-    want = set()
-    for key in (1, 2, 3):
-        items = sorted({v for k, v in rows if k == key})
-        want |= set(combinations(items, 2))
-    assert got == want
+    per_key = Counter()
+    for key in {k for k, _ in rows}:
+        items = sorted({v for k, v in rows if k == key and v is not None})
+        per_key.update(combinations(items, 2))
+    for chunk in (16, 1):
+        got = {
+            (r["pa"], r["pb"])
+            for r in cooccurrence_pairs(df, "k", "v", chunk=chunk).collect()
+        }
+        assert got == set(per_key), chunk
+        multi = Counter(
+            (r["pa"], r["pb"])
+            for r in cooccurrence_pairs(
+                df, "k", "v", chunk=chunk, distinct_pairs=False
+            ).collect()
+        )
+        assert multi == per_key, chunk
+
+
+def test_cooccurrence_pairs_plans_no_join(spark):
+    """Oversized keys are cut into blocks inside the one map-side pass
+    over the grouped item sets: the plan holds no block self-join."""
+    from certa_spark.operators.graph import cooccurrence_pairs
+
+    df = spark.createDataFrame([(1, 2), (1, 3)], "k long, v long")
+    for distinct_pairs in (True, False):
+        plan = cooccurrence_pairs(
+            df, "k", "v", chunk=16, distinct_pairs=distinct_pairs
+        )._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, plan
 
 
 def test_pagerank_dangling_conserves_mass(spark):
@@ -1012,16 +1041,22 @@ def test_louvain_local_matches_distributed(spark):
     ed += [(20 + i, 20 + j) for i in range(4) for j in range(i + 1, 4)]
     ed += [(4, 10), (13, 20), (23, 0), (2, 3)]  # bridges + dup edge
     e = spark.createDataFrame(ed, "src long, dst long")
+    # zero-weight edges: 2m = 0, so every node stays in its own community
+    zero = spark.createDataFrame(
+        [(a, b, 0) for a, b in ed[:6]], "src long, dst long, w long"
+    )
 
     for kwargs in (
         dict(max_rounds=5, max_levels=3),
         dict(max_rounds=3, max_levels=2),
+        dict(max_rounds=5, max_levels=3, weight="w", graph=zero),
     ):
+        graph = kwargs.pop("graph", e)
         dist, h_dist = louvain(
-            e, with_history=True, partitions=4, **kwargs
+            graph, with_history=True, partitions=4, **kwargs
         )
         loc, h_loc = louvain(
-            e, with_history=True, partitions=4,
+            graph, with_history=True, partitions=4,
             local_max_edges=10**6, **kwargs
         )
         assert sorted(map(tuple, dist.collect())) == sorted(
@@ -1042,6 +1077,24 @@ def test_louvain_local_matches_distributed(spark):
         map(tuple, dist2.collect())
     )
     assert h_hyb == h_dist2
+
+
+def test_louvain_level0_local_finish_is_local(spark):
+    """A Louvain whose level-0 edge list finishes on the driver returns
+    the driver's mapping as a local relation: collecting it launches no
+    Spark job (a checkpointed projection would launch at least one)."""
+    from certa_spark.operators.graph import louvain
+
+    from tests.test_explainer import _jobs_of
+
+    ed = [(i, j) for i in range(5) for j in range(i + 1, 5)] + [(4, 10), (10, 11)]
+    out = louvain(
+        spark.createDataFrame(ed, "src long, dst long"), partitions=4,
+        local_max_edges=100,
+    )
+    n_jobs, rows = _jobs_of(spark, "louvain-local-collect", out.collect)
+    assert n_jobs == 0, n_jobs
+    assert sorted(r["node"] for r in rows) == [0, 1, 2, 3, 4, 10, 11]
 
 
 def test_cc_local_matches_distributed(spark):
